@@ -66,7 +66,13 @@ object Metrics {
     )
   }
 
-  def compute(backtest: DataFrame, keys: Seq[String] = Seq("symbol")): DataFrame = {
+  /** The per-group metric table. `extra` aggregates ride the same hash
+    * aggregate and land between the keys and the metrics, so a caller
+    * that also needs per-group counts of the backtest frame (MarketJob's
+    * funnel) gets them without a second pass over it.
+    */
+  def compute(backtest: DataFrame, keys: Seq[String] = Seq("symbol"),
+              extra: Seq[Column] = Nil): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy("bucket_ms")
       .rowsBetween(Window.unboundedPreceding, 0)
     // window layering (r07): cum-max and lag share partition/order, so
@@ -77,7 +83,7 @@ object Metrics {
         lag(col("position"), 1).over(
           Window.partitionBy(keys.map(col): _*).orderBy("bucket_ms")).as("prev_pos"))
       .withColumn("dd", exp(col("log_equity") - col("log_peak")) - 1)
-    val aggs = aggExprs(col("net_returns"), col("position"), col("prev_pos"), col("dd"))
+    val aggs = extra ++ aggExprs(col("net_returns"), col("position"), col("prev_pos"), col("dd"))
     withPeak.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 }
