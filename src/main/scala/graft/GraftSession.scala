@@ -1,5 +1,6 @@
 package graft
 
+import graft.streaming.LocalCheckpointFileManager
 import org.apache.spark.sql.SparkSession
 
 /** Session factory with the settings every graft job wants.
@@ -35,12 +36,9 @@ object GraftSession {
       // Backtester query throw under ANSI — masked by Bench's
       // catch-all until round 6.)
       .config("spark.sql.ansi.enabled", "false")
-      // env toggle is DIAGNOSTIC only (A/B attribution of per-query AQE
-      // constants); the default — AQE on — is what every entry point and
-      // the graded bench run with, and what production scale requires
-      // (runtime coalescing + skew splitting, guide §2.5).
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      // AQE on: production scale needs runtime coalescing + skew
+      // splitting (guide §2.5).
+      .config("spark.sql.adaptive.enabled", "true")
       // events.ts is parquet TIMESTAMP(NANOS): surface it as a ns-epoch
       // long (exact) instead of failing the scan.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -71,6 +69,11 @@ object GraftSession {
       // whole-stage codegen on for them.
       .config("spark.sql.codegen.maxFields", "300")
       .config("spark.ui.enabled", "false")
+      // Streaming checkpoints on the local file system commit through
+      // Hadoop's FileSystem API: without the native Hadoop library,
+      // Spark's FileContext default forks `readlink` on every rename, a
+      // third of a small micro-batch. See LocalCheckpointFileManager.
+      .config(LocalCheckpointFileManager.ConfKey, classOf[LocalCheckpointFileManager].getName)
   }
 
   def get(appName: String = "graft"): SparkSession = {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.streaming.LocalCheckpointFileManager
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole forked test JVM. */
@@ -14,6 +15,8 @@ object TestSpark {
       // null-on-div-by-zero (DuckDB-matching) semantics — see GraftSession
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // the same streaming checkpoint manager as GraftSession
+      .config(LocalCheckpointFileManager.ConfKey, classOf[LocalCheckpointFileManager].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
