@@ -58,14 +58,6 @@ final case class GraftConfig(
   // --- portfolio optimization (PortfolioOpt.scala) ---
   /** Max symbols the weight-grid optimizer enumerates (driver-side grid). */
   optMaxSymbols: Int = 64,
-  // --- memo storage (Memo.pin; guide §5) ---
-  /** Largest checkpointed memo (actual block bytes) that still gets the
-    * statistics-restoring cache layer. Above this the frame could never
-    * auto-broadcast anyway (the session broadcast threshold is 64 MB),
-    * so the second resident copy buys nothing — corpus-scale memos at
-    * sf1+ keep a single copy and plan as "large", which is correct.
-    */
-  memoPinCacheMaxBytes: Long = 64L * 1024 * 1024,
   /** Smallest tick-scan size estimate (optimizer stats bytes — parquet
     * file footprint) at which the day-chunked two-level scan forms run
     * (q_asof_join union-fill, effective-spread quote basis). Below it
@@ -149,7 +141,6 @@ object GraftConfig {
           c.copy(lshPairsPerDocPerBucket = v.toLong)
         case "ann.lsh_cap"                    => c.copy(annLshCap = v.toLong)
         case "portfolio.max_symbols"          => c.copy(optMaxSymbols = v.toInt)
-        case "memo.pin_cache_max_bytes"       => c.copy(memoPinCacheMaxBytes = v.toLong)
         case "scan.chunked_min_input_bytes"   => c.copy(chunkedScanMinBytes = v.toLong)
         case other => throw new IllegalArgumentException(
           s"unknown config key '$other' — known keys follow the reference's " +

@@ -56,10 +56,8 @@ object GraftSession {
       // 1m serializes the bar windows); at production scale the floor is
       // irrelevant — any shuffle past a few GB is governed by the 64 MB
       // advisory size, so this is NOT a local-only tuning constant (the
-      // advisory default is unchanged). Env-overridable like the CPU
-      // count.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE_BYTES", "128k"))
+      // advisory default is unchanged).
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
       .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
       // The engine's wide single-pass aggregates (54 exact co-moment
       // sums in q_feature_importance, 3×13 metrics in

@@ -9,6 +9,15 @@ import scala.collection.concurrent.TrieMap
   * for a long-lived session over mutable paths. Such sessions call
   * [[Memo.invalidateAll]] after rewriting inputs: every registered memo
   * map clears and its materialized DataFrames unpersist.
+  *
+  * A memo frame takes one of two forms:
+  *  - [[pin]] is eager: one `localCheckpoint`, filled when the memo is
+  *    built. It cuts the lineage, so each of many warm readers analyzes a
+  *    scan instead of the memo's whole build, and it carries its measured
+  *    size. Use it for frames that many queries read.
+  *  - [[layout]] (or a bare `.cache()`) is lazy: it fills inside the first
+  *    job that reads it. Use it for one cold chain, as in `MarketJob`,
+  *    where an eager fill would be an extra job.
   */
 object Memo {
   private val clearers = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
@@ -25,62 +34,31 @@ object Memo {
 
   def invalidateAll(): Unit = synchronized { clearers.foreach(_.apply()) }
 
-  /** The r16 materialization pattern for deep-lineage memo frames:
-    * localCheckpoint truncates the logical plan to the computed rows —
-    * without it every consumer QUERY re-analyzes the memo's full build
-    * lineage on every call (the per-call driver gap ProfileQuery
-    * attributes to no stage; the IVF-PQ explain was 27.5k lines of
-    * re-inlined k-means before the cut) — and the cache layer on top
-    * restores accurate size statistics, which a bare LogicalRDD lacks
-    * (default sizeInBytes = huge), so the planner keeps auto-broadcasting
-    * genuinely small memo frames instead of falling back to sort-merge
-    * (measured +0.7 s on q_ann_recall_audit with the checkpoint alone).
-    * Values are unchanged — the memo builders are deterministic.
-    * [[release]] unpersists both layers.
-    *
-    * Size-adaptive cache layer (r17, guide §5 storage pressure): the
-    * cache layer DOUBLES the memo's resident footprint, and the only
-    * thing it buys is size statistics — which change planning solely
-    * for frames small enough to auto-broadcast. MemoFootprint at the
-    * generated sf1 measured 3.2 GB of persisted memo blocks (vs 246 MB
-    * at sf0.1, ~13x for 10x data), the largest checkpoint+cache pairs
-    * at 170-360 MB per layer; linear to sf10 that is ~32 GB of a 49 GB
-    * heap competing with execution memory. So: after materializing the
-    * checkpoint, read its actual block size from the block manager and
-    * add the cache layer only under `memo.pin_cache_max_bytes` (default
-    * 64 MB = the session's autoBroadcastJoinThreshold — the size past
-    * which accurate stats no longer change the plan). Every sf0.1 pin
-    * is under the threshold (largest 36 MB), so graded-bench planning
-    * is byte-identical; at sf1+ the corpus-scale pins keep a single
-    * copy and plan as "large", which for them is the correct estimate.
+  /** The eager memo form: materialize `df` once as a local checkpoint and
+    * return a frame over it that carries what the planner needs.
+    *  - Lineage: consumers plan over a scan of the rows, not the memo's
+    *    build (the IVF-PQ explain was 27.5k lines of k-means before).
+    *  - Size: the scan reports the checkpoint's measured block bytes. A
+    *    bare checkpoint keeps the build plan's estimate, often far too
+    *    large, so a small memo would sort-merge instead of broadcast.
+    *  - Width: the partitions the build left, which after a shuffle is
+    *    AQE's coalesced count, at most the session's shuffle partitions
+    *    (the core count): a pin's scan runs at most one task per core.
+    * A pin declares no layout: a declared one drops the consumer's
+    * Exchange, so a query's final `orderBy` range-samples by re-running
+    * the consumer's work from the scan (ROADMAP item 4). Values are
+    * unchanged (the builders are deterministic). [[release]] frees the
+    * checkpoint blocks.
     */
-  def pin(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val ck = df.localCheckpoint()
-    val sc = ck.sparkSession.sparkContext
-    val ids = ck.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }.toSet
-    val bytes = sc.getRDDStorageInfo.filter(i => ids(i.id))
-      .map(i => i.memSize + i.diskSize).sum
-    if (bytes <= GraftConfig.active.memoPinCacheMaxBytes) ck.cache() else ck
-  }
+  def pin(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.graft.Bridge.measuredCheckpoint(df.localCheckpoint())
 
-  /** Lay a memo frame out for its consumers before caching (r17, guide
-    * §2.4 "two operations keyed the same way can share one exchange" —
-    * the session-memo analog of a bucketed+sorted table): hash-partition
-    * by `partCols` and sort within partitions by `sortCols`, THEN cache.
-    * `InMemoryRelation` preserves the child plan's outputPartitioning and
-    * outputOrdering, so every consumer whose window/aggregate clusters by
-    * a prefix of `partCols` (and orders by `sortCols`) elides its own
-    * Exchange and Sort — measured (LayoutProbe, sf0.1): a symbol-window
-    * consumer drops from 4 jobs / ~420 ms to 3 jobs / ~240 ms warm.
-    * The one-off fill pays the extra exchange+sort instead (priced by the
-    * bench's memo-cold lane). Values are unchanged: layout only permutes
-    * row order, and every registered query ends in its own total-order
-    * sort. Scale note: the laid partition count is the shuffle default
-    * (AQE may coalesce it); parallelism of downstream key-windows is
-    * bounded by the key cardinality either way — this changes where the
-    * shuffle happens (once at fill), not how wide the key space is.
+  /** The lazy memo form: hash-partition by `partCols`, sort within
+    * partitions by `sortCols`, then `.cache()`. `InMemoryRelation` keeps
+    * that partitioning and ordering, so consumers keyed the same way
+    * elide their Exchange and Sort; the fill runs inside the first job
+    * that reads the frame (a symbol-window consumer at sf0.1: 4 jobs /
+    * ~420 ms warm → 3 jobs / ~240 ms).
     */
   def layout(df: org.apache.spark.sql.DataFrame,
              partCols: Seq[String], sortCols: Seq[String]): org.apache.spark.sql.DataFrame = {
@@ -92,12 +70,11 @@ object Memo {
 
   /** Eviction hook for DataFrame-valued memos. `Dataset.unpersist` only
     * consults the CacheManager, which does not track the RDD-level
-    * persistence `localCheckpoint` installs — so for the checkpoint-
-    * materialized memo frames (the repartition+localCheckpoint pattern)
-    * it is a no-op and the blocks would stay resident until the
-    * ContextCleaner eventually GCs the RDD. Walk the analyzed plan for
-    * the checkpoint's `LogicalRDD` leaves and unpersist their RDDs
-    * directly, in addition to the CacheManager path.
+    * persistence `localCheckpoint` installs — so for a [[pin]] it is a
+    * no-op and the blocks would stay resident until the ContextCleaner
+    * eventually GCs the RDD. Walk the analyzed plan for the checkpoint's
+    * `LogicalRDD` leaves and unpersist their RDDs directly, in addition
+    * to the CacheManager path (which frees a [[layout]]).
     */
   def release(df: org.apache.spark.sql.DataFrame): Unit = {
     import scala.util.control.NonFatal

@@ -71,14 +71,10 @@ object ExtrasPack extends QueryPack {
         col("*") +: StratSfx.map { case (x, _) =>
           max(col(s"log_equity_$x")).over(cum).as(s"peak_$x")
         }: _*)
-      peakLayer.select(
+      graft.Memo.pin(peakLayer.select(
         col("*") +: StratSfx.map { case (x, _) =>
           (exp(col(s"log_equity_$x") - col(s"peak_$x")) - 1).as(s"dd_$x")
-        }: _*)
-        // repartition + localCheckpoint (the Micro.cumTicksCached
-        // pattern): shallow consumer plans, no frozen 1-partition layout
-        .repartition(32, col("symbol"))
-        .localCheckpoint()
+        }: _*))
     })
 
   /** EMA via a bounded 60-tap weighted sum of window lags — one sort per

@@ -61,20 +61,12 @@ object Ann {
     val c1 = centroids(emb, a1)
     // materialization barriers: assignments/centroids are tiny (n rows /
     // k rows) but feed multiple consumers — without them each downstream
-    // reference re-executes the whole upstream k-means chain.
-    // localCheckpoint + cache (r16): a bare cache keeps the full
-    // two-round k-means LINEAGE in the logical plan, so every consumer
-    // query re-analyzes that subtree per call — the ANN family's 0.2-0.7 s
-    // per-call driver gap in the r16 profile (the IVF-PQ explain was
-    // 27.5k lines). The checkpoint truncates the plan to the
-    // materialized rows (values identical — the k-means is deterministic
-    // and snapped); the cache ON TOP restores accurate size statistics,
-    // which a bare LogicalRDD lacks (default sizeInBytes = huge), so the
-    // emb⋈assigned joins keep auto-broadcasting the tiny side instead of
-    // falling back to sort-merge (measured +0.7 s on q_ann_recall_audit
-    // with checkpoint alone). Memo.release unpersists both layers.
-    val a2 = assign(emb, c1).localCheckpoint().cache()
-    val c2 = centroids(emb, a2).localCheckpoint().cache()
+    // reference re-executes the whole upstream k-means chain. Pinned, not
+    // cached: a cache keeps the two-round k-means lineage for every
+    // consumer to re-analyze, and the pin's measured size keeps the
+    // emb⋈assigned joins broadcasting the tiny side (see Memo.pin).
+    val a2 = graft.Memo.pin(assign(emb, c1))
+    val c2 = graft.Memo.pin(centroids(emb, a2))
     (a2, c2)
   }
 
@@ -440,14 +432,13 @@ object Ann {
       .select(col("sub"), col("vec_id").cast("int").as("cell"), col("sv").as("cv"))
     val a1 = pqAssign(sv, seeds)
     val c1 = pqCentroids(sv, a1)
-    // materialization barriers, same rationale (and the same r16
-    // localCheckpoint-under-cache lineage truncation) as kmeansCells:
-    // codes feed both the round-2 centroid build and ADC scoring, and
-    // for IVF-PQ the codes' lineage otherwise stacks residual joins on
-    // top of the full coarse k-means plan — the worst per-call analysis
-    // cost in the ANN family
-    val a2 = pqAssign(sv, c1).localCheckpoint().cache()
-    val c2 = pqCentroids(sv, a2).localCheckpoint().cache()
+    // materialization barriers, pinned as in kmeansCells: codes feed
+    // both the round-2 centroid build and ADC scoring, and for IVF-PQ
+    // the codes' lineage otherwise stacks residual joins on top of the
+    // full coarse k-means plan — the worst per-call analysis cost in the
+    // ANN family
+    val a2 = graft.Memo.pin(pqAssign(sv, c1))
+    val c2 = graft.Memo.pin(pqCentroids(sv, a2))
     (a2, c2)
   }
 
@@ -521,7 +512,7 @@ object Ann {
     * on EVERY call (measured with tools/CanonProbe: 'x_9 vs 'x_11 in the
     * otherwise-identical plans). The .cache() era masked the miss via
     * CacheManager sameResult dedup (analysis normalizes the lambdas);
-    * the r16 localCheckpoint materialization has no such net, so the
+    * the r16 checkpoint materialization has no such net, so the
     * miss became a full per-call PQ re-train. Memoizing the DataFrame
     * OBJECT (no persistence — it's just a plan) makes the downstream
     * memo key the same instance every call, which is the stability
@@ -599,7 +590,7 @@ object Ann {
     * the (tiny) frontier against the cached edge list, one cached-
     * corpus scan to fetch candidate vectors (candidate ids broadcast),
     * one bounded per-query rank — no row-scale window, no all-pairs
-    * anything; rounds are lazily localCheckpointed and the predecessor
+    * anything; rounds are lazily checkpointed and the predecessor
     * freed (the ConnectedComponents truncation pattern), so plan depth
     * stays flat at any hop count. At 100 TB the edge list is n·degree fixed-width
     * rows and each query touches ≤ beam·degree·hops vectors — the
@@ -714,7 +705,7 @@ object Ann {
           .filter(col("erk") <= beam)
           .select("q_id", "vec_id", "cosine")
       }
-    // Driver-local beam state (r17; replaces the per-hop localCheckpoint
+    // Driver-local beam state (r17; replaces the per-hop checkpoint
     // loop). The walk's state is STRICTLY driver-bounded at any corpus
     // size: visited ≤ queries·(beam + hops·beam·degree) rows (seeds are
     // already top-beam-filtered, each hop adds at most frontier·degree

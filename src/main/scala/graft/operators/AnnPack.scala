@@ -57,10 +57,9 @@ object AnnPack extends QueryPack {
   private def beamEdgesCached(s: SparkSession, d: String): DataFrame =
     beamEdgeCache.getOrElseUpdate((s, d), {
       val e = Ann.knnGraphEdges(candScoresCached(s, d), degree = 8)
-      // knnGraphEdges returns a plain cached frame; re-pin it so plan
-      // lineage truncates (r16 pin sweep) and free the interim cache
+      // knnGraphEdges returns a plain cached frame; pin it so plan
+      // lineage truncates, then free the interim cache
       val pinned = graft.Memo.pin(e)
-      pinned.count()
       e.unpersist(blocking = false)
       pinned
     })

@@ -22,17 +22,12 @@ object BarsPack extends QueryPack {
   private def minuteDollarCached(s: SparkSession, d: String): DataFrame =
     minuteDollarCache.getOrElseUpdate((s, d), {
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-      Micro.signedTicksCached(s, d)
+      graft.Memo.pin(Micro.signedTicksCached(s, d)
         .groupBy(col("symbol"),
           expr("ts div 86400000000000").as("day"),
           expr("ts div 60000000000 * 60000").as("bucket_ms"))
         .agg(sum(col("dollar_c").cast(dec)).as("dc"),
-          sum(col("vol").cast(dec)).as("v"))
-        // repartition + localCheckpoint (the Micro.cumTicksCached
-        // pattern): shallow consumer plans, AQE's small-SF coalesce not
-        // frozen into a 1-partition layout
-        .repartition(32, col("symbol"), col("day"))
-        .localCheckpoint()
+          sum(col("vol").cast(dec)).as("v")))
     })
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

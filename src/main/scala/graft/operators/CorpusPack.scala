@@ -128,7 +128,7 @@ object CorpusPack extends QueryPack {
       val perShingle = shingles5Cached(s, d)
         .groupBy("shingle")
         .agg(sort_array(collect_set(col("source"))).as("srcs"))
-      val r = perShingle
+      perShingle
         .select(explode(concat(
           expr("transform(srcs, x -> struct(x as src1, cast(null as string) as src2))"),
           expr("flatten(transform(srcs, (x, i) -> " +
@@ -138,8 +138,6 @@ object CorpusPack extends QueryPack {
         .groupBy("src1", "src2")
         .agg(count(lit(1)).as("n"))
         .transform(graft.Memo.pin)
-      r.count() // materialize so every consumer reads the tiny cached frame
-      r
     })
 
   /** DuckDB mirror of [[shingles5]] (final CTE: shd5). */

@@ -296,7 +296,7 @@ object EventsPack extends QueryPack {
   private def dauWauExact(s: SparkSession, d: String): DataFrame =
     dauWauCache.getOrElseUpdate((s, d), {
       val w = Window.partitionBy("user_id").orderBy("day")
-      userDaysCached(s, d)
+      graft.Memo.pin(userDaysCached(s, d)
         .withColumn("lo",
           greatest(col("day"), coalesce(lag(col("day"), 1).over(w) + 7, col("day"))))
         .select(col("day"), col("lo"),
@@ -308,8 +308,7 @@ object EventsPack extends QueryPack {
           count(when(col("d") >= col("lo"), 1)).as("wau"))
         .filter(col("dau") > 0)
         .select((col("d") * 86400000L).as("day_ms"), col("dau"), col("wau"),
-          (col("dau") / col("wau")).as("stickiness"))
-        .localCheckpoint()
+          (col("dau") / col("wau")).as("stickiness")))
     })
 
   /** [[dauWauApprox]] over an already-distinct (user_id, day) frame —

@@ -160,7 +160,11 @@ object Micro {
           coalesce(sum(col("_td")).over(wc), lit(0L)).as("_offd"),
           coalesce(sum(col("_tv")).over(wc), lit(0L)).as("_offv"),
           coalesce(sum(col("_tsv")).over(wc), lit(0L)).as("_offsv"))
-      base.join(broadcast(offs), Seq("symbol", "_ck"))
+      // pinned, not cached: the consumers are single hash aggregates,
+      // and re-analyzing the deep tick lineage (chunk links + two window
+      // layers) per execution cost more driver time than the aggregates
+      // themselves
+      graft.Memo.pin(base.join(broadcast(offs), Seq("symbol", "_ck"))
         .select(col("symbol"), col("ts"), col("event_id"), col("price"),
           col("vol"), col("cents"), col("dollar_c"), col("dpc"), col("dpn"),
           col("sign"), col("sv"),
@@ -169,19 +173,7 @@ object Micro {
           (coalesce(sum(col("vol")).over(wIn), lit(0L)) + col("_offv"))
             .as("cum_vol_prev"),
           (coalesce(sum(col("sv")).over(wIn), lit(0L)) + col("_offsv"))
-            .as("cum_sv_prev"))
-        // localCheckpoint, not cache: the consumers are single hash
-        // aggregates, and re-analyzing the deep tick lineage (chunk
-        // links + two window layers) per execution cost more driver
-        // time than the aggregates themselves; checkpointing truncates
-        // the logical plan to the materialized blocks. The explicit
-        // symbol repartition matters twice: AQE coalesces the small-SF
-        // shuffle (a bare checkpoint would FREEZE that 1-partition
-        // layout), and a user repartition both survives AQE and is
-        // advertised by the checkpointed scan, so per-symbol consumers
-        // still fuse their aggregates without an exchange.
-        .repartition(32, col("symbol"))
-        .localCheckpoint()
+            .as("cum_sv_prev")))
     })
 
   /** Ticks with `dpc` = cent-price diff vs the previous tick of the same
@@ -367,17 +359,12 @@ object Micro {
   def barCentLagsCached(s: SparkSession, d: String): DataFrame =
     barLagCache.getOrElseUpdate((s, d), {
       val w = Window.partitionBy("symbol").orderBy("bucket_ms")
-      Bars.ohlcvCached(s, d, 60)
+      // pinned, as cumTicksCached: the ACF/VR aggregates read a shallow scan
+      graft.Memo.pin(Bars.ohlcvCached(s, d, 60)
         .select(col("symbol"), col("bucket_ms"),
           floor(col("close") * 100 + lit(0.5)).cast("long").as("cents"))
         .select(col("symbol") +: col("bucket_ms") +: col("cents") +:
-          (1 to BarLags).map(k => lag(col("cents"), k).over(w).as(s"c$k")): _*)
-        // localCheckpoint for the same lineage-analysis reason as
-        // cumTicksCached (scan-shallow consumer plans); same explicit
-        // symbol repartition so the checkpointed scan advertises a
-        // partitioning the ACF/VR aggregates can ride exchange-free
-        .repartition(32, col("symbol"))
-        .localCheckpoint()
+          (1 to BarLags).map(k => lag(col("cents"), k).over(w).as(s"c$k")): _*))
     })
 
   /** Lo-MacKinlay variance ratio VR(q) = Var(q-period diff)/(q·Var(1))

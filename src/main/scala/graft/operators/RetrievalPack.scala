@@ -74,7 +74,7 @@ object RetrievalPack extends QueryPack {
       val stats = Tables.documents(s, d)
         .agg(count(lit(1)).as("n_docs"),
           sum(size(split(col("text"), " ")).cast("long")).as("total_toks"))
-      val r = tf.join(broadcast(dfreq), "tok")
+      tf.join(broadcast(dfreq), "tok")
         .crossJoin(broadcast(stats))
         .withColumn("avgdl", col("total_toks").cast("double") / col("n_docs"))
         .withColumn("u",
@@ -85,11 +85,6 @@ object RetrievalPack extends QueryPack {
               lit(1e6) + 0.5).cast("long"))
         .select("doc_id", "tok", "tf", "dl", "df", "u")
         .transform(graft.Memo.pin)
-      // materialize NOW (the overlapAgg/candScores Memo pattern): without
-      // this the full scoring build lands inside whichever consumer query
-      // runs first and skews its timing (r10 ADVICE)
-      r.count()
-      r
     })
 
   /** Session-memoized PageRank table over the kNN top-3 graph — the
@@ -141,10 +136,8 @@ object RetrievalPack extends QueryPack {
       val e = AnnPack.candScoresCached(s, d)
       val dirs = e.select(col("v1").as("vec_id"), col("v2").as("nbr"), col("cosine"))
         .unionByName(e.select(col("v2").as("vec_id"), col("v1").as("nbr"), col("cosine")))
-      val r = twoLevelRank(dirs, Seq("vec_id"), k = 3, score = "cosine", id = "nbr")
+      twoLevelRank(dirs, Seq("vec_id"), k = 3, score = "cosine", id = "nbr")
         .transform(graft.Memo.pin)
-      r.count()
-      r
     })
 
   private def graphRankCached(s: SparkSession, d: String): DataFrame =

@@ -131,14 +131,10 @@ object TextPack extends QueryPack {
 
   def tokenCountsCached(s: SparkSession, d: String): DataFrame =
     tokenCountCache.getOrElseUpdate((s, d),
-      graft.Tables.documents(s, d)
+      graft.Memo.pin(graft.Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
           explode(split(col("text"), " ")).as("tok"))
-        .groupBy("doc_id", "source", "tok").agg(count(lit(1)).as("tf"))
-        // repartition + localCheckpoint (the Micro.cumTicksCached
-        // pattern): shallow consumer plans, no frozen 1-partition layout
-        .repartition(32, col("doc_id"))
-        .localCheckpoint())
+        .groupBy("doc_id", "source", "tok").agg(count(lit(1)).as("tf"))))
 
   /** Session-memoized IDF model table — (tok, df, n_docs): document
     * frequency over the bag-of-words memo plus the corpus size, the
@@ -152,15 +148,14 @@ object TextPack extends QueryPack {
   def idfCached(s: SparkSession, d: String): DataFrame =
     idfCache.getOrElseUpdate((s, d), {
       val nDocs = graft.Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
-      tokenCountsCached(s, d)
+      graft.Memo.pin(tokenCountsCached(s, d)
         // df = DISTINCT DOCS containing the token. The memo rows are
         // (doc_id, source, tok) groups, so a plain row count would
         // equal distinct docs only while doc_id→source is 1:1; the
         // distinct makes the definition hold for a multi-source doc
         // too (two-phase partial-distinct aggregate, still vocab-scale)
         .groupBy("tok").agg(countDistinct(col("doc_id")).as("df"))
-        .crossJoin(broadcast(nDocs))
-        .localCheckpoint()
+        .crossJoin(broadcast(nDocs)))
     })
 
   /** Session-memoized frozen-tokenizer piece table — (tok, pieces) from
@@ -174,10 +169,9 @@ object TextPack extends QueryPack {
 
   def bpePiecesCached(s: SparkSession, d: String): DataFrame =
     bpePiecesCache.getOrElseUpdate((s, d),
-      Bpe.piecesTable(
+      graft.Memo.pin(Bpe.piecesTable(
         tokenCountsCached(s, d).filter(length(col("tok")) >= 1)
-          .select("tok").distinct())
-        .localCheckpoint())
+          .select("tok").distinct())))
 
   /** Session-memoized corpus bigram LM counts — (tok, t1, c12, c1) with
     * c12 the bigram count and c1 the left-context total (a vocab-scale
@@ -191,13 +185,9 @@ object TextPack extends QueryPack {
 
   def bigramLmCached(s: SparkSession, d: String): DataFrame =
     bigramLmCache.getOrElseUpdate((s, d),
-      posShinglesCached(s, d)
+      graft.Memo.pin(posShinglesCached(s, d)
         .groupBy("tok", "t1").agg(count(lit(1)).as("c12"))
-        .withColumn("c1", sum(col("c12")).over(Window.partitionBy("tok")))
-        // repartition + localCheckpoint (the Micro.cumTicksCached
-        // pattern): shallow consumer plans, no frozen 1-partition layout
-        .repartition(32, col("tok"))
-        .localCheckpoint())
+        .withColumn("c1", sum(col("c12")).over(Window.partitionBy("tok")))))
 
   /** Jaccard pair chain over the shingle CTE (final CTE: jp) — shared by
     * the pair and cluster oracles.
@@ -877,7 +867,7 @@ object TextPack extends QueryPack {
     * result is cached like the other shared frames (bars, shingles,
     * pairs) AND — the round-7 variance fix — its scaffolding is freed
     * DETERMINISTICALLY once the result is materialized: the final
-    * round's localCheckpoint blocks, the initial label cache, and the
+    * round's checkpoint blocks, the initial label cache, and the
     * edges cache all unpersist inside the build instead of lingering
     * for the async ContextCleaner. Leaving them resident made the
     * loop's cost land nondeterministically on later bench queries
@@ -1222,7 +1212,7 @@ object TextPack extends QueryPack {
       // merges): DuckDB's binder caps expression recursion at 128, so a
       // single nested chain breaks past ~120 merges — the full-capacity
       // r15 table needs the staged form (the mirror of encode's staged
-      // localCheckpoint boundaries)
+      // checkpoint boundaries)
       val stages = Bpe.TrainedMerges.grouped(Bpe.MergeStage).toSeq
       val stageCtes = stages.zipWithIndex.map { case (grp, i) =>
         val src = if (i == 0) "s" else s"m${i - 1}"

@@ -1,11 +1,14 @@
 package graft.streaming
 
 import java.net.URI
+import java.util.UUID
+
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FSDataInputStream, LocalFileSystem, Path, PathFilter}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
-import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.{CancellableFSDataOutputStream, RenameBasedFSDataOutputStream}
 
 /** Checkpoint file manager that writes local checkpoints through Hadoop's
   * FileSystem API and everything else through Spark's default.
@@ -29,6 +32,11 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *    onto an existing file returns false, so the FileSystem path would
   *    silently skip an overwrite; FileContext is the correct path there.
   *
+  * A `createAtomic` whose commit fails (a no-overwrite write that loses
+  * to an existing file) deletes its temp file: Spark's stream rethrows
+  * from `close` without cancelling, and `cancel()` after `close()` is a
+  * no-op.
+  *
   * Spark still wraps this manager in its checksum layer when
   * `spark.sql.streaming.checkpoint.fileChecksum.enabled` is on.
   */
@@ -51,7 +59,14 @@ final class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
     }
 
   override def createAtomic(p: Path, overwriteIfPossible: Boolean): CancellableFSDataOutputStream =
-    delegate.createAtomic(p, overwriteIfPossible)
+    delegate match {
+      case fm: FileSystemBasedCheckpointFileManager =>
+        // Spark's temp-file name, kept here so a failed close can delete it
+        val tmp = new Path(p.getParent, s".${p.getName}.${UUID.randomUUID}.tmp")
+        new LocalCheckpointFileManager.TempDeletingStream(
+          new RenameBasedFSDataOutputStream(fm, p, tmp, overwriteIfPossible), fm, tmp)
+      case other => other.createAtomic(p, overwriteIfPossible)
+    }
   override def open(p: Path): FSDataInputStream = delegate.open(p)
   override def list(p: Path, filter: PathFilter): Array[FileStatus] = delegate.list(p, filter)
   override def mkdirs(p: Path): Unit = delegate.mkdirs(p)
@@ -63,6 +78,24 @@ final class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
 }
 
 object LocalCheckpointFileManager {
+  /** Delegates to `inner`, and deletes `tmp` when `inner.close()` fails:
+    * the rename did not happen, and nothing else removes the temp file.
+    */
+  private final class TempDeletingStream(inner: CancellableFSDataOutputStream,
+                                         fm: CheckpointFileManager, tmp: Path)
+      extends CancellableFSDataOutputStream(inner) {
+    override def close(): Unit =
+      try inner.close()
+      catch {
+        case NonFatal(e) =>
+          // the caller needs e itself: a FileAlreadyExistsException tells
+          // the commit log that another writer won
+          try fm.delete(tmp) catch { case NonFatal(d) => e.addSuppressed(d) }
+          throw e
+      }
+    override def cancel(): Unit = inner.cancel()
+  }
+
   /** The Spark setting that names the checkpoint file manager class. */
   val ConfKey = "spark.sql.streaming.checkpointFileManagerClass"
 

@@ -1,11 +1,12 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
+import org.apache.spark.sql.execution.exchange.Exchange
 
-/** Prints formatted physical plans for headline queries and greps the
-  * properties that matter at scale: parquet filter pushdown, pruned read
-  * schemas, broadcast joins on dimension tables, whole-stage codegen
-  * coverage. `runMain graft.tools.ExplainAudit <sfDir> [query...]`.
+/** Prints, per query, the properties that matter at scale: parquet
+  * filter pushdown, pruned read schemas, whole-stage codegen coverage,
+  * and the executed plan's Exchange and Sort counts and join kinds.
+  * `runMain graft.tools.ExplainAudit <sfDir> [query...]`.
   */
 object ExplainAudit {
   val Headliners = Seq(
@@ -97,7 +98,6 @@ object ExplainAudit {
         org.apache.spark.sql.execution.FormattedMode)
       val scans = plan.linesIterator.filter(l =>
         l.contains("PushedFilters") || l.contains("ReadSchema")).map(_.trim).toSeq
-      val joins = plan.linesIterator.filter(_.contains("Join")).map(_.trim.takeWhile(_ != '(')).toSeq
       // execute so AQE finalizes; codegen stages appear as *(n) markers
       val df2 = SparkEntry.queries(name)(spark, d)
       df2.collect()
@@ -113,15 +113,23 @@ object ExplainAudit {
       // AQE query stages, but NOT InMemoryRelation's cached lineage
       // (a memoized frame's windows ran once at cache fill, not here).
       val windowExecs = countWindows(df2.queryExecution.executedPlan)
-      val cart = collectNodes(df2.queryExecution.executedPlan).count(
+      val executed = collectNodes(df2.queryExecution.executedPlan)
+      val cart = executed.count(
         _.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec])
       cartesians += cart
+      val joins = executed.collect {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j.nodeName
+      }.groupBy(identity).toSeq.sortBy(_._1).map { case (k, v) => s"$k*${v.size}" }
       println(s"==== $name")
       scans.foreach(l => println(s"  scan: ${l.take(160)}"))
-      joins.distinct.foreach(l => println(s"  join: $l"))
       println(s"  codegen spans: $codegenSpans")
       println(s"  window execs: $windowExecs")
       println(s"  cartesian products: $cart")
+      // the executed (AQE-final) plan's shape on one line per query: diff
+      // two runs' AUDIT lines for a before/after plan summary
+      println(s"AUDIT $name exchanges=${executed.count(_.isInstanceOf[Exchange])} " +
+        s"sorts=${executed.count(_.isInstanceOf[org.apache.spark.sql.execution.SortExec])} " +
+        s"joins=${if (joins.isEmpty) "-" else joins.mkString(",")}")
     }
     println(s"==== TOTAL queries=${names.size} cartesian_products=$cartesians")
     spark.stop()

@@ -1,15 +1,16 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Decomposes a registered query's WARM per-call cost into driver phases
   * (guide §1/§7.3): DataFrame construction (pack code + table reads +
   * analysis), executedPlan (optimization + physical planning), and
   * execution (jobs: AQE stage materializations + the final toRdd count),
-  * with the number of Spark jobs each call submits. The residual between
-  * execution wall and stage/task time is AQE re-planning + scheduling —
-  * the per-query constant VERDICT r16 item 3 targets.
+  * with the Spark jobs each call submits and each stage's task count.
+  * The residual between execution wall and stage/task time is AQE
+  * re-planning + scheduling — the per-query constant VERDICT r16 item 3
+  * targets.
   *
   * `runMain graft.tools.GapProbe <sfDir> <query>[,query...] [reps]`
   */
@@ -22,9 +23,12 @@ object GapProbe {
     val spark = GraftSession.get("graft-gapprobe")
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val l = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+        stageTasks.add(sc.stageInfo.numTasks)
     }
     spark.sparkContext.addSparkListener(l)
     for (name <- names if name == "jobconst") {
@@ -65,12 +69,14 @@ object GapProbe {
         qe.executedPlan // forces analysis+optimization+physical planning
         val t2 = System.nanoTime()
         jobs.set(0)
+        stageTasks.clear()
         qe.toRdd.count()
         val t3 = System.nanoTime()
         Thread.sleep(200)
+        val tasks = stageTasks.toArray.mkString(",")
         println(f"GAP $name rep=$r construct=${(t1 - t0) / 1e6}%7.1f ms " +
           f"plan=${(t2 - t1) / 1e6}%7.1f ms exec=${(t3 - t2) / 1e6}%7.1f ms " +
-          f"jobs=${jobs.get()}%3d total=${(t3 - t0) / 1e6}%7.1f ms")
+          f"jobs=${jobs.get()}%3d total=${(t3 - t0) / 1e6}%7.1f ms tasks=$tasks")
       }
     }
     spark.stop()

@@ -5,8 +5,8 @@ import graft.{GraftSession, SparkEntry}
 /** Memo storage-pressure audit (VERDICT r16 item 4): fills the session
   * memo graph by running the memo-heavy query families once, then dumps
   * every persisted RDD's memory/disk footprint from the block manager —
-  * the doubled-layer cost of `Memo.pin` (localCheckpoint blocks + the
-  * InMemoryRelation on top) made visible per memo class and per SF.
+  * the resident cost of the memo checkpoints and caches, per memo class
+  * and per SF.
   *
   * `runMain graft.tools.MemoFootprint <sfDir> [query,query,...]`
   */

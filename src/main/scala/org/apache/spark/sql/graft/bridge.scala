@@ -1,15 +1,53 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.SparkEnv
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.RDDBlockId
 
 /** Bridge into the `private[sql]` Column↔Expression converters — the
   * supported escape hatch for libraries that define native Catalyst
   * expressions against the classic SQL API (Spark 4 wraps Columns around
-  * ColumnNodes, not Expressions).
+  * ColumnNodes, not Expressions) — and into `Dataset.ofRows` and the
+  * block manager's record of a checkpoint's blocks.
   */
 object Bridge {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A frame over the RDD of `checkpointed` (a local checkpoint) whose
+    * `LogicalRDD` reports the RDD's measured block bytes as its size, or
+    * the build plan's estimate when some partition has no block on
+    * record. Built anew: `LogicalRDD` equality ignores its stats, so a
+    * `transform` that only swaps them is dropped as unchanged.
+    */
+  def measuredCheckpoint(checkpointed: DataFrame): DataFrame = {
+    val ds = checkpointed.asInstanceOf[classic.Dataset[Row]]
+    val session = ds.sparkSession
+    val lr = ds.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    val stats = blockBytes(lr.rdd).map(b => Statistics(sizeInBytes = BigInt(b))).getOrElse(lr.stats)
+    val node = LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering, lr.isStreaming)(
+      session, Some(stats), Some(lr.constraints))
+    classic.Dataset.ofRows(session, node)
+  }
+
+  /** Total bytes of `rdd`'s blocks, one per partition, or None if a
+    * partition has none. Read from the BlockManagerMaster, which each
+    * block put updates before its task ends; the status store behind
+    * `SparkContext.getRDDStorageInfo` is filled later by the listener
+    * bus and can still miss blocks when the checkpoint job returns.
+    */
+  private def blockBytes(rdd: RDD[_]): Option[Long] = {
+    val master = SparkEnv.get.blockManager.master
+    val perPartition = rdd.partitions.indices.map { p =>
+      master.getBlockStatus(RDDBlockId(rdd.id, p), askStorageEndpoints = false)
+        .values.map(b => b.memSize + b.diskSize).maxOption
+    }
+    if (perPartition.forall(_.isDefined)) Some(perPartition.flatten.sum) else None
+  }
 }

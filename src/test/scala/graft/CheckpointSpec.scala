@@ -71,6 +71,17 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     assert(read(new File(dir, "0")) == "third")
   }
 
+  test("a no-overwrite createAtomic that loses to an existing file leaves no temp file") {
+    val dir = tempDir("ckpt_collide")
+    val m = manager(dir)
+    val p = new Path(dir.toURI.toString + "0")
+    write(m, p, "first", overwrite = false)
+    val committed = dir.list().toSet
+    intercept[FileAlreadyExistsException](write(m, p, "second", overwrite = false))
+    assert(dir.list().toSet == committed, dir.list().toSeq)
+    assert(read(new File(dir, "0")) == "first")
+  }
+
   test("cancel leaves neither the target nor a temp file behind") {
     val dir = tempDir("ckpt_cancel")
     val m = manager(dir)

@@ -30,32 +30,70 @@ class MemoReleaseSpec extends AnyFunSuite {
       s"invalidateAll left ${leaked.size} checkpointed RDD(s) persistent: $leaked")
   }
 
-  /** r17 size-adaptive pin (guide §5): the statistics-restoring cache
-    * layer doubles a memo's resident footprint and only changes planning
-    * for broadcast-sized frames, so pin adds it solely under the
-    * configured byte ceiling. Both branches must still truncate lineage
-    * (the whole point of pin) and stay releasable.
+  /** Memo.pin is the one eager form: a single checkpoint (no cache
+    * layer) whose scan carries the measured block bytes as its size, so
+    * a small memo built from an over-estimating plan still broadcasts.
     */
-  test("pin caches small frames, skips the cache layer above the ceiling") {
+  test("pin keeps one checkpoint that carries its measured size") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.functions._
     import org.apache.spark.storage.StorageLevel
-    def mkFrame() = spark.range(0, 1000).selectExpr("id", "id * 2 as v")
-    val small = Memo.pin(mkFrame())
-    assert(small.storageLevel != StorageLevel.NONE,
-      "a frame under the ceiling must keep the statistics cache layer")
-    assert(small.queryExecution.analyzed.collectFirst {
-      case _: org.apache.spark.sql.execution.LogicalRDD => true
-    }.nonEmpty, "pin must truncate lineage to a checkpoint leaf")
-    val big = GraftConfig.withConfig(
-      GraftConfig.active.copy(memoPinCacheMaxBytes = 1L)) {
-      Memo.pin(mkFrame())
-    }
-    assert(big.storageLevel == StorageLevel.NONE,
-      "a frame above the ceiling must not add the second resident copy")
-    assert(big.queryExecution.analyzed.collectFirst {
-      case _: org.apache.spark.sql.execution.LogicalRDD => true
-    }.nonEmpty, "the uncached branch still truncates lineage")
-    assert(big.count() == 1000 && small.count() == 1000)
-    Memo.release(small); Memo.release(big)
+    def checkpointRdds(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
+    // five rows whose build plan estimates megabytes
+    def small() = spark.range(0, 1000000).groupBy((col("id") % 5).as("k")).count()
+    val pinned = Memo.pin(small())
+    assert(checkpointRdds(pinned).size == 1, "pin must truncate lineage to a checkpoint leaf")
+    assert(pinned.storageLevel == StorageLevel.NONE)
+    assert(pinned.queryExecution.analyzed.collectFirst { case r: InMemoryRelation => r }.isEmpty,
+      "pin must not add a cache layer")
+    val id = checkpointRdds(pinned).head.id
+    val bytes = org.apache.spark.BlockManagerAccess.rddBlockBytes(id).values.sum
+    assert(bytes > 0)
+    assert(pinned.queryExecution.optimizedPlan.stats.sizeInBytes == BigInt(bytes))
+
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val threshold = spark.conf.get(key)
+    spark.conf.set(key, 1024L * 1024)
+    try {
+      val bare = small().localCheckpoint()
+      assert(bare.queryExecution.optimizedPlan.stats.sizeInBytes > 1024 * 1024,
+        "the bare checkpoint must over-estimate, or the join below tests nothing")
+      val facts = spark.range(0, 100000).select((col("id") % 5).as("k"))
+      val joined = facts.join(pinned, "k")
+      assert(joined.queryExecution.sparkPlan.collectFirst { case j: BroadcastHashJoinExec => j }.nonEmpty,
+        joined.queryExecution.sparkPlan.treeString)
+      assert(joined.count() == 100000)
+      Memo.release(bare)
+    } finally spark.conf.set(key, threshold)
+
+    Memo.map[String, org.apache.spark.sql.DataFrame](Memo.release).put("small", pinned)
+    assert(spark.sparkContext.getPersistentRDDs.contains(id))
+    Memo.invalidateAll()
+    assert(!spark.sparkContext.getPersistentRDDs.contains(id))
+  }
+
+  /** The size must count every partition's block as soon as pin
+    * returns, even while the status store still lags: the planner
+    * broadcasts whatever reads as small, so a partial count would
+    * broadcast a large memo.
+    */
+  test("pin's size counts every partition's block as soon as pin returns") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val rows = 80000L
+    val resume = org.apache.spark.ListenerBusAccess.holdStatusQueue(spark.sparkContext)
+    val pinned = try Memo.pin(spark.range(0, rows, 1, 8).selectExpr("id", "id * 2 as v"))
+      finally resume()
+    val size = pinned.queryExecution.optimizedPlan.stats.sizeInBytes
+    val rdd = pinned.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd }.get
+    val blocks = org.apache.spark.BlockManagerAccess.rddBlockBytes(rdd.id)
+    assert(rdd.partitions.length == 8 && blocks.keySet == (0 until 8).toSet, blocks)
+    assert(size == BigInt(blocks.values.sum))
+    // two longs a row, at the least
+    assert(size >= rows * 16, s"$size bytes for $rows rows")
+    Memo.release(pinned)
   }
 
   /** r17 Memo.layout (guide §2.4): a memo cached pre-partitioned by its
