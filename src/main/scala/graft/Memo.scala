@@ -16,8 +16,11 @@ import scala.collection.concurrent.TrieMap
   *    scan instead of the memo's whole build, and it carries its measured
   *    size. Use it for frames that many queries read.
   *  - [[layout]] (or a bare `.cache()`) is lazy: it fills inside the first
-  *    job that reads it. Use it for one cold chain, as in `MarketJob`,
-  *    where an eager fill would be an extra job.
+  *    job that reads it. Use it for frames that several queries read, such
+  *    as `Bars.ohlcvCached`, where the layout spares each reader a shuffle.
+  * A chain with one reader per run keeps no memo at all: under AQE a lazy
+  * cache is still a fill job of its own (a `TableCacheQueryStage`) plus an
+  * eager planning pass, paid on every cold run for a copy read once.
   */
 object Memo {
   private val clearers = scala.collection.mutable.ArrayBuffer.empty[() => Unit]

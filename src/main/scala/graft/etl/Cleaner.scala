@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,20 +16,26 @@ object Cleaner {
 
   /** Per-symbol IQR bounds (cleaner.py:21, method="iqr"); exact
     * interpolated percentiles, threshold × IQR beyond the quartiles.
+    *
+    * Only rows where `valid` holds enter the percentiles (`percentile`
+    * skips the nulls `when` leaves), so the bounds equal those over the
+    * pre-filtered feed, and a symbol with no valid row gets null bounds.
+    * `extra` aggregates run over every row of the same aggregate and land
+    * between `symbol` and the bounds: a caller that also needs per-symbol
+    * counts of the unfiltered feed (MarketJob's raw tick count) gets them
+    * without a second scan.
     */
-  def iqrBounds(ticks: DataFrame, threshold: Double = graft.GraftConfig.active.outlierThreshold): DataFrame =
+  def iqrBounds(ticks: DataFrame, threshold: Double = graft.GraftConfig.active.outlierThreshold,
+                valid: Column = lit(true), extra: Seq[Column] = Nil): DataFrame = {
+    val (q1, q3) = (element_at(col("qs"), 1), element_at(col("qs"), 2))
     ticks
       .groupBy("symbol")
-      .agg(percentile(col("price"), array(lit(0.25), lit(0.75))).as("qs"))
-      .select(
-        col("symbol"),
-        element_at(col("qs"), 1).as("q1"),
-        element_at(col("qs"), 2).as("q3"))
-      .select(
-        col("symbol"),
-        (col("q1") - (col("q3") - col("q1")) * threshold).as("lo"),
-        (col("q3") + (col("q3") - col("q1")) * threshold).as("hi")
-      )
+      .agg(percentile(when(valid, col("price")), array(lit(0.25), lit(0.75))).as("qs"), extra: _*)
+      .select(col("*"),
+        (q1 - (q3 - q1) * threshold).as("lo"),
+        (q3 + (q3 - q1) * threshold).as("hi"))
+      .drop("qs")
+  }
 
   /** Filter ticks outside per-symbol IQR bounds; bounds side is tiny and
     * broadcast.

@@ -26,18 +26,23 @@ object Bars {
     (expr(s"ts div ${seconds * 1000000000L}") * (seconds * 1000L)).as("bucket_ms")
 
   /** OHLCV bars at `seconds` granularity from a tick feed
-    * (ts[ns], symbol, price, volume).
+    * (ts[ns], symbol, price, volume). `extra` aggregates ride the same
+    * hash aggregate and land after `n_trades`, so a per-symbol value the
+    * feed carries (MarketJob's raw tick count) reaches the bars without a
+    * join.
     */
-  def ohlcv(ticks: DataFrame, seconds: Long): DataFrame =
+  def ohlcv(ticks: DataFrame, seconds: Long, extra: Seq[Column] = Nil): DataFrame =
     ticks
       .groupBy(col("symbol"), bucketMs(seconds))
       .agg(
         min_by(col("price"), col("ts")).as("open"),
-        max(col("price")).as("high"),
-        min(col("price")).as("low"),
-        max_by(col("price"), col("ts")).as("close"),
-        sum(col("volume")).as("volume"),
-        count(lit(1)).as("n_trades")
+        Seq(
+          max(col("price")).as("high"),
+          min(col("price")).as("low"),
+          max_by(col("price"), col("ts")).as("close"),
+          sum(col("volume")).as("volume"),
+          count(lit(1)).as("n_trades")
+        ) ++ extra: _*
       )
 
   /** Session-memoized cached bars: ~20 queries derive from the same

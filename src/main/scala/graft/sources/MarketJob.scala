@@ -12,20 +12,24 @@ import org.apache.spark.sql.functions._
   * ONE sources-level job, the trading-side sibling of [[CorpusJob]]:
   *
   *   raw ticks
-  *     -> validate: price-range gate (cleaner.py:215 bounds)
-  *     -> clean: per-symbol IQR outlier filter over the valid feed
-  *        (cleaner.py:230 clean_pipeline order; bounds broadcast)
+  *     -> bounds: one aggregate over the tick scan gives the per-symbol
+  *        IQR bounds of the valid prices (cleaner.py:215 price-range
+  *        gate, cleaner.py:230 clean_pipeline order) and the raw tick
+  *        count; broadcast back onto the valid feed
+  *     -> clean: the IQR outlier filter, carrying the raw count
   *     -> resample: 1-minute OHLCV bars over the CLEANED feed
   *     -> signal + backtest: the oracled ma-cross vectorized chain
   *     -> report: the 13-metric performance table per symbol, with
   *        the funnel counts (raw/clean ticks, bars) so the manifest
   *        carries the composition evidence.
   *
-  * Two session memos, both lazy caches: the cleaned bars, laid out by
-  * symbol once at their fill, and the backtest frame over them. That
-  * one exchange serves the whole signal -> backtest -> metrics chain;
-  * the clean and bar counts come out of the metrics aggregate itself,
-  * so no stage is read twice and no tick-sized frame stays resident.
+  * The job is one plan and keeps no memo. Every frame in it has one
+  * reader per run, and under AQE a lazy cache is a fill job of its own
+  * plus an eager planning pass, so a cold run would pay for copies it
+  * never reads twice. The funnel counts ride aggregates the chain runs
+  * anyway: the raw count the bounds aggregate, the clean and bar counts
+  * the metrics aggregate. One shuffle by symbol serves the whole
+  * signal -> backtest -> metrics chain.
   *
   * Every stage is the oracled building block the individual queries
   * verify (q_validate_prices, q_clean_outliers_iqr, q_ohlcv_1min,
@@ -41,67 +45,41 @@ object MarketJob extends QueryPack {
   private val MinPrice = 10.0
   private val MaxPrice = 180.0
 
-  /** Cleaned tick feed: validate -> per-symbol IQR gate (keeps
-    * ts/price/volume so the bar stage can resample it). Not memoized:
-    * [[summary]] reads it once, through the bar fill, and takes its
-    * per-symbol count from the bars' `n_trades` (every clean tick lands
-    * in exactly one bar), so a cached copy would only hold the job's one
-    * tick-sized frame resident.
+  /** Cleaned tick feed: validate -> per-symbol IQR gate, keeping
+    * ts/price/volume for the bar stage and the symbol's raw tick count
+    * (`n_raw_ticks`, over valid and invalid ticks alike) for the report.
+    * The bounds and the raw count come from one aggregate over the tick
+    * scan; the bounds see only the valid prices.
     */
   def cleanTicks(s: SparkSession, d: String): DataFrame = {
-    val valid = Tables.ticks(s, d)
-      .select("symbol", "ts", "event_id", "price", "volume")
-      .filter(col("price") >= MinPrice && col("price") <= MaxPrice)
-    valid.join(broadcast(Cleaner.iqrBounds(valid)), "symbol")
+    val ticks = Tables.ticks(s, d).select("symbol", "ts", "event_id", "price", "volume")
+    val valid = col("price") >= MinPrice && col("price") <= MaxPrice
+    val bounds = Cleaner.iqrBounds(ticks, valid = valid,
+      extra = Seq(count(lit(1)).as("n_raw_ticks")))
+    ticks.filter(valid).join(broadcast(bounds), "symbol")
       .filter(col("price") >= col("lo") && col("price") <= col("hi"))
-      .select("symbol", "ts", "event_id", "price", "volume")
+      .select("symbol", "ts", "event_id", "price", "volume", "n_raw_ticks")
   }
 
-  /** Session memo for the cleaned 1-minute bars, laid out the way
-    * [[graft.operators.Bars.ohlcvCached]] lays out the raw bars:
-    * partitioned by symbol and sorted by (symbol, bucket_ms), then
-    * cached lazily (one copy, filled by the first reader). The ma-cross
-    * and backtest windows plan straight on its scan, with no Exchange or
-    * Sort of their own.
-    */
-  private val cleanBarCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
+  /** The cleaned 1-minute bars, still carrying `n_raw_ticks`. */
   def cleanBars(s: SparkSession, d: String): DataFrame =
-    cleanBarCache.getOrElseUpdate((s, d),
-      graft.Memo.layout(graft.operators.Bars.ohlcv(cleanTicks(s, d), 60),
-        Seq("symbol"), Seq("symbol", "bucket_ms")))
-
-  /** Session memo for the backtest equity frame over the CLEANED bars —
-    * the signal + vectorized-backtest stage of the composed job. Distinct
-    * from Backtester.maCrossCached, which runs on the raw 1-minute bars:
-    * this chain's input is the IQR-cleaned feed, so it shares nothing
-    * with that memo. A plain lazy cache: the cached relation keeps the
-    * bars' symbol partitioning, so the metrics windows and aggregate
-    * read it without an exchange, and a warm call re-runs only them.
-    */
-  private val btCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
-  private def btCleanCached(s: SparkSession, d: String): DataFrame =
-    btCache.getOrElseUpdate((s, d),
-      Backtester.run(Signals.maCrossPlain(cleanBars(s, d))).cache())
+    graft.operators.Bars.ohlcv(cleanTicks(s, d), 60,
+      extra = Seq(max(col("n_raw_ticks")).as("n_raw_ticks")))
 
   /** The composed per-symbol summary manifest. The funnel counts ride
     * the metrics aggregate: the backtest frame has one row per clean
-    * bar, and its `n_trades` sum is the symbol's clean tick count. The
-    * manifest has one row per symbol, so it is sorted in one partition
-    * (a range-partitioned `orderBy` would add a sampling job).
+    * bar, its `n_trades` sum is the symbol's clean tick count, and every
+    * row carries the raw count. The manifest has one row per symbol, so
+    * it is sorted in one partition (a range-partitioned `orderBy` would
+    * add a sampling job).
     */
-  def summary(s: SparkSession, d: String): DataFrame = {
-    val raw = Tables.ticks(s, d).groupBy("symbol")
-      .agg(count(lit(1)).as("n_raw_ticks"))
-    val met = Metrics.compute(btCleanCached(s, d), extra = Seq(
-      sum(col("n_trades")).as("n_clean_ticks"), count(lit(1)).as("n_bars")))
-    raw.join(met, "symbol")
+  def summary(s: SparkSession, d: String): DataFrame =
+    Metrics.compute(Backtester.run(Signals.maCrossPlain(cleanBars(s, d))), extra = Seq(
+      max(col("n_raw_ticks")).as("n_raw_ticks"),
+      sum(col("n_trades")).as("n_clean_ticks"),
+      count(lit(1)).as("n_bars")))
       .repartition(1)
       .sortWithinPartitions("symbol")
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_market_job_summary" -> ((s, d) => summary(s, d)))

@@ -1,12 +1,15 @@
 package graft.streaming
 
 import java.net.URI
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
 import java.util.UUID
 
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, FSDataInputStream, LocalFileSystem, Path, PathFilter}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FSDataInputStream, LocalFileSystem, Path, PathFilter, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.{CancellableFSDataOutputStream, RenameBasedFSDataOutputStream}
 
@@ -27,7 +30,10 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *    keeps its overwrite and no-overwrite semantics. The file system is
   *    pinned because with Hive on the classpath `file:` resolves to Hive's
   *    `ProxyLocalFileSystem`, whose rename onto an existing file returns
-  *    false: Spark's manager would then silently skip an overwrite.
+  *    false: Spark's manager would then silently skip an overwrite. Its
+  *    raw layer sets permissions through `java.nio`
+  *    ([[LocalCheckpointFileManager.NioPermissionRawFs]]), so a create no
+  *    longer forks `chmod` for the file and its `.crc` sidecar.
   *  - Any other scheme: Spark's default choice. On HDFS, `FileSystem.rename`
   *    onto an existing file returns false, so the FileSystem path would
   *    silently skip an overwrite; FileContext is the correct path there.
@@ -46,7 +52,11 @@ final class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
   private[graft] val delegate: CheckpointFileManager =
     if (LocalCheckpointFileManager.isLocalPath(path.toUri, hadoopConf)) {
       val conf = new Configuration(hadoopConf)
-      conf.set("fs.file.impl", classOf[LocalFileSystem].getName)
+      conf.setClass("fs.file.impl", classOf[LocalCheckpointFileManager.ForkFreeLocalFileSystem],
+        classOf[FileSystem])
+      // Hadoop resolves the class through the conf's loader, which may not
+      // be the one that sees graft's classes
+      conf.setClassLoader(getClass.getClassLoader)
       // uncached, or a cached ProxyLocalFileSystem comes back
       conf.setBoolean("fs.file.impl.disable.cache", true)
       new FileSystemBasedCheckpointFileManager(path, conf)
@@ -78,6 +88,24 @@ final class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
 }
 
 object LocalCheckpointFileManager {
+  /** Hadoop's checksummed `LocalFileSystem` over [[NioPermissionRawFs]]. */
+  final class ForkFreeLocalFileSystem extends LocalFileSystem(new NioPermissionRawFs)
+
+  /** A `RawLocalFileSystem` whose `setPermission` sets the mode bits with
+    * `java.nio` (`chmod(2)` in-process). Without the native Hadoop library
+    * the parent forks `chmod` for it, and every create (the file and its
+    * `.crc` sidecar) and every new directory calls it: about 12 forks per
+    * `tick_stream` micro-batch. A sticky bit, which `PosixFilePermission`
+    * cannot express, still goes through the parent.
+    */
+  final class NioPermissionRawFs extends RawLocalFileSystem {
+    override def setPermission(p: Path, permission: FsPermission): Unit =
+      if (permission.getStickyBit) super.setPermission(p, permission)
+      // without a sticky bit, toString is the nine-letter form ("rw-r-----")
+      else Files.setPosixFilePermissions(pathToFile(p).toPath,
+        PosixFilePermissions.fromString(permission.toString))
+  }
+
   /** Delegates to `inner`, and deletes `tmp` when `inner.close()` fails:
     * the rename did not happen, and nothing else removes the temp file.
     */

@@ -4,13 +4,16 @@ import java.io.File
 import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.Bars
-import graft.streaming.{LocalCheckpointFileManager, StreamingBars}
+import graft.streaming.{LocalCheckpointFileManager, StreamingBars, StreamingDedup}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, FileAlreadyExistsException, Path, RawLocalFileSystem}
-import org.apache.spark.sql.execution.streaming.checkpointing.{FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
+import org.apache.hadoop.fs.{DelegateToFileSystem, FileAlreadyExistsException, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -27,10 +30,10 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
 
   private def tempDir(name: String): File = Files.createTempDirectory(name).toFile
 
-  private def manager(dir: File) =
-    new LocalCheckpointFileManager(new Path(dir.toURI), new Configuration())
+  private def manager(dir: File, conf: Configuration = new Configuration()) =
+    new LocalCheckpointFileManager(new Path(dir.toURI), conf)
 
-  private def write(m: LocalCheckpointFileManager, p: Path, text: String, overwrite: Boolean): Unit = {
+  private def write(m: CheckpointFileManager, p: Path, text: String, overwrite: Boolean): Unit = {
     val out = m.createAtomic(p, overwrite)
     out.write(text.getBytes(UTF_8))
     out.close()
@@ -91,6 +94,49 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     assert(dir.list().isEmpty, dir.list().toSeq)
   }
 
+  /** Commands of the processes the JVM started while `f` ran (JFR). */
+  private def processStarts(f: => Unit): Seq[String] = {
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try f finally rec.stop()
+    val file = Files.createTempFile("process_starts", ".jfr")
+    try {
+      rec.dump(file)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.map(_.getString("command")).toSeq
+    } finally {
+      rec.close()
+      Files.delete(file)
+    }
+  }
+
+  test("local checkpoint files and directories get the chmod path's mode bits, without a fork") {
+    val conf = new Configuration()
+    conf.set("fs.permissions.umask-mode", "027")
+    // what a state store writes: a new directory, a delta and its .crc sidecar
+    def modes(m: CheckpointFileManager, root: File): Map[String, String] = {
+      m.mkdirs(new Path(root.toURI.toString + "state/0"))
+      write(m, new Path(root.toURI.toString + "state/0/1.delta"), "delta", overwrite = false)
+      Files.walk(root.toPath).iterator.asScala.filterNot(_ == root.toPath).map { f =>
+        root.toPath.relativize(f).toString -> PosixFilePermissions.toString(Files.getPosixFilePermissions(f))
+      }.toMap
+    }
+    // the parent's path: Hadoop's LocalFileSystem, which forks chmod
+    val chmodConf = new Configuration(conf)
+    chmodConf.set("fs.file.impl", classOf[LocalFileSystem].getName)
+    chmodConf.setBoolean("fs.file.impl.disable.cache", true)
+    val chmodDir = tempDir("ckpt_chmod")
+    val viaChmod = modes(new FileSystemBasedCheckpointFileManager(new Path(chmodDir.toURI), chmodConf), chmodDir)
+
+    val nioDir = tempDir("ckpt_nio")
+    var viaNio = Map.empty[String, String]
+    val forks = processStarts { viaNio = modes(manager(nioDir, conf), nioDir) }
+    assert(viaNio.keySet == Set("state", "state/0", "state/0/1.delta", "state/0/.1.delta.crc"), viaNio)
+    assert(viaNio == viaChmod)
+    assert(viaNio("state/0/1.delta") == "rw-r-----", viaNio)
+    assert(!forks.exists(_.contains("chmod")), forks)
+  }
+
   test("state-store deltas still get Spark's checksum files") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
@@ -114,9 +160,9 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     }
     val stateFiles = Files.walk(new File(ckpt, "state").toPath).toArray.map(_.toString)
     assert(stateFiles.exists(_.endsWith("/1.delta")), stateFiles.toSeq)
-    // Spark's checksum file (N.delta.crc), not Hadoop's .N.delta.crc sidecar
-    assert(stateFiles.exists(f => f.endsWith(".delta.crc") && !new File(f).getName.startsWith(".")),
-      stateFiles.toSeq)
+    // Spark's checksum file (N.delta.crc), and Hadoop's .N.delta.crc sidecar
+    assert(stateFiles.exists(_.endsWith("/1.delta.crc")), stateFiles.toSeq)
+    assert(stateFiles.exists(_.endsWith("/.1.delta.crc")), stateFiles.toSeq)
   }
 }
 
@@ -178,5 +224,56 @@ class StreamingRestartSpec extends AnyFunSuite {
     assert(expected.length > 5)
     assert(emitted.length == emitted.toSet.size, "duplicate bar")
     assert(emitted.toSet == expected.toSet)
+  }
+
+  test("StreamingDedup restarted on its checkpoint emits every key exactly once") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("restart_dedup").toFile
+    val (in, out, ckpt) = (new File(root, "in"), new File(root, "out"), new File(root, "ckpt"))
+    // file i: 20 new keys, a copy of one of them, and copies of ten keys
+    // first seen two files earlier, so files k and k+1 repeat keys whose
+    // first copy was emitted before the stop. Event time is 1 s per key
+    // and the watermark delay an hour, so no key's state expires.
+    val files = (0 until 6).map { i =>
+      val fresh = (i * 20L until i * 20L + 20L).map(id => (id * 1000L, id))
+      val again = if (i < 2) Nil else ((i - 2) * 20L until (i - 2) * 20L + 10L).map(id => (id * 1000L + 7L, id))
+      fresh ++ again :+ (fresh.head._1 + 3L, fresh.head._2)
+    }
+    val k = 3
+    assert(files(k).map(_._2).exists(id => files.take(k).flatten.exists(_._2 == id)))
+    val schema = StructType(Seq(StructField("ts", TimestampType), StructField("id", LongType)))
+
+    def feed(i: Int): Unit =
+      files(i).map { case (ms, id) => (new Timestamp(ms), id) }
+        .toDF("ts", "id").coalesce(1)
+        .write.mode("append").parquet(in.getPath)
+
+    def start(): StreamingQuery =
+      StreamingDedup.dedup(spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .parquet(in.getPath), "1 hour", Seq("id"))
+        .writeStream.format("parquet").outputMode("append")
+        .option("checkpointLocation", ckpt.getPath).start(out.getPath)
+
+    feed(0)
+    val q1 = start()
+    q1.processAllAvailable()
+    for (i <- 1 until k) {
+      feed(i)
+      q1.processAllAvailable()
+    }
+    q1.stop()
+    val q2 = start()
+    for (i <- k until files.length) {
+      feed(i)
+      q2.processAllAvailable()
+    }
+    val resumedAt = q2.recentProgress.map(_.batchId).min
+    q2.stop()
+    assert(resumedAt >= k, s"restart began at batch $resumedAt")
+
+    val emitted = spark.read.parquet(out.getPath).select("id").as[Long].collect().toSeq
+    assert(emitted.length == emitted.distinct.length,
+      s"keys emitted twice: ${emitted.diff(emitted.distinct)}")
+    assert(emitted.toSet == files.flatten.map(_._2).toSet)
   }
 }

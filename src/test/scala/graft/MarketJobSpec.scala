@@ -6,12 +6,11 @@ import graft.sources.MarketJob
 import graft.tools.ExplainAudit
 import org.apache.spark.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The composed market pipeline (raw -> validate -> IQR clean -> bars
@@ -70,13 +69,15 @@ class MarketJobSpec extends AnyFunSuite {
   }
 
   /** Spark jobs one cold `summary(...).collect()` submits under TestSpark
-    * (local[4], 4 shuffle partitions). Per-job overhead is most of a cold
-    * summary at small scale, so an added memo pin, re-read or sort job
-    * shows here as a changed count.
+    * (local[4], 4 shuffle partitions): schema inference, the bounds
+    * shuffle and broadcast, the bar shuffle, the symbol shuffle, the
+    * one-partition shuffle and the result. Per-job overhead is most of a
+    * cold summary at small scale, so an added memo fill, re-read or sort
+    * job shows here as a changed count.
     */
-  private val ColdSummaryJobs = 11
+  private val ColdSummaryJobs = 7
 
-  test("cold summary runs a pinned number of Spark jobs, metrics read the memo without an exchange") {
+  test("cold summary runs a pinned number of Spark jobs as one memo-free plan") {
     val sc = spark.sparkContext
     def coldJobs(): (Int, org.apache.spark.sql.DataFrame) = {
       cold()
@@ -99,51 +100,40 @@ class MarketJobSpec extends AnyFunSuite {
     assert(n1 == n2, s"cold job count must repeat exactly ($n1 vs $n2)")
     assert(n1 == ColdSummaryJobs, s"cold summary ran $n1 Spark jobs, pinned $ColdSummaryJobs")
 
-    // the metrics aggregate and everything under it: the metrics windows
-    // over the backtest memo's scan, with no shuffle anywhere between
-    val metricsAgg = ExplainAudit.collectNodes(df.queryExecution.executedPlan).collectFirst {
-      case a: BaseAggregateExec if a.output.exists(_.name == "sharpe_ratio") => a
+    val nodes = ExplainAudit.collectNodes(df.queryExecution.executedPlan)
+    // the bounds aggregate and the valid feed; the raw count has no scan
+    val eventScans = nodes.collect {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == "events.parquet") => s
     }
-    assert(metricsAgg.nonEmpty, "no metrics aggregate in the executed plan")
-    val below = ExplainAudit.collectNodes(metricsAgg.get)
-    assert(below.exists {
-      case s: InMemoryTableScanExec => s.output.exists(_.name == "log_equity")
-      case _ => false
-    }, "the metrics aggregate must read the backtest memo's InMemoryTableScan")
-    val shuffles = below.filter {
-      case _: ShuffleExchangeLike | _: ShuffleQueryStageExec => true
-      case _ => false
+    assert(eventScans.size == 2, s"events.parquet scanned ${eventScans.size} times")
+    assert(!nodes.exists(_.isInstanceOf[InMemoryTableScanExec]), "the job must read no cache")
+
+    // bars -> signal -> backtest -> metrics: one shuffle by symbol
+    def aggWith(c: String) = nodes.collectFirst {
+      case a: BaseAggregateExec if a.output.exists(_.name == c) => a
     }
-    assert(shuffles.isEmpty,
-      s"exchange between the backtest memo and the metrics aggregate:\n${shuffles.mkString("\n")}")
+    val (metricsAgg, barAgg) = (aggWith("sharpe_ratio"), aggWith("n_trades"))
+    assert(metricsAgg.nonEmpty && barAgg.nonEmpty, "metrics or bar aggregate missing")
+    val underBars = ExplainAudit.collectNodes(barAgg.get)
+    val between = ExplainAudit.collectNodes(metricsAgg.get)
+      .filterNot(n => underBars.exists(_ eq n)).filter(_.isInstanceOf[ShuffleExchangeLike])
+    assert(between.size == 1,
+      s"${between.size} shuffles between the bar and metrics aggregates:\n${between.mkString("\n")}")
   }
 
-  /** The memos are lazy caches now, not checkpoint pins: Memo.release
-    * must free them through the CacheManager, a warm call must reuse
-    * them, and the tick feed must never be cached.
-    */
-  test("invalidateAll frees every MarketJob memo; a warm call persists nothing new") {
+  test("a cold summary persists nothing, and a second call returns identical rows") {
     val sc = spark.sparkContext
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
     cold()
     val before = sc.getPersistentRDDs.keySet
+    assert(cacheManager.isEmpty)
     val first = MarketJob.summary(spark, d).collect().toSeq
-    val filled = sc.getPersistentRDDs.keySet -- before
-    assert(filled.nonEmpty, "summary must fill its memos (otherwise this tests nothing)")
-    val bars = MarketJob.cleanBars(spark, d)
-    val bt = Backtester.run(Signals.maCrossPlain(bars))
-    assert(bars.storageLevel != StorageLevel.NONE && bt.storageLevel != StorageLevel.NONE,
-      "the cleaned bars and the backtest frame must be cached")
-    assert(MarketJob.cleanTicks(spark, d).storageLevel == StorageLevel.NONE,
-      "the tick-sized clean feed must not be cached")
-
+    assert(first.nonEmpty)
+    assert(sc.getPersistentRDDs.keySet == before, "a cold summary must persist no RDD")
+    assert(cacheManager.isEmpty, "a cold summary must register nothing with the CacheManager")
     val second = MarketJob.summary(spark, d).collect().toSeq
-    assert(second == first, "a warm call must return identical rows")
-    assert(sc.getPersistentRDDs.keySet -- before == filled, "a warm call must persist nothing new")
-
-    Memo.invalidateAll()
-    assert(bars.storageLevel == StorageLevel.NONE && bt.storageLevel == StorageLevel.NONE,
-      "invalidateAll must drop MarketJob's frames from the CacheManager")
-    val leaked = filled.intersect(sc.getPersistentRDDs.keySet)
-    assert(leaked.isEmpty, s"invalidateAll left ${leaked.size} RDD(s) persistent: $leaked")
+    assert(second == first, "a second call must return identical rows")
   }
 }
