@@ -2,13 +2,22 @@ package graft
 
 import scala.collection.concurrent.TrieMap
 
-/** Registry for the session-memoized shared subplans (bars, shingles,
-  * jaccard pairs, portfolio stats/frontier). Entries are keyed by
-  * (session, dataset[, param]) and are never implicitly invalidated —
-  * correct for the driver's immutable test datasets, a stale-read hazard
-  * for a long-lived session over mutable paths. Such sessions call
-  * [[Memo.invalidateAll]] after rewriting inputs: every registered memo
-  * map clears and its materialized DataFrames unpersist.
+/** The one registry of session memos: shared subplans (bars, shingles,
+  * jaccard pairs, portfolio stats/frontier), reader plans and the
+  * bucketed fact layout. Every memo is declared, filled and evicted here.
+  *
+  * A key is a memo name, unique per call site (`"TextPack.shingles"`),
+  * followed by the parts that identify the input: usually the session
+  * and dataset dir, plus a parameter, a frame instance or a
+  * canonicalized plan where the memo is keyed on those. [[share]] runs
+  * `build` on a miss and returns the stored value on a hit; a `build`
+  * may itself call the registry for another key.
+  *
+  * Entries are never implicitly invalidated — correct for immutable
+  * input datasets, a stale-read hazard for a long-lived session over
+  * mutable paths. Such sessions call [[invalidateAll]] after
+  * rewriting inputs: every entry runs its eviction once (for frames,
+  * [[release]]) and the registry empties, so the next call rebuilds.
   *
   * A memo frame takes one of two forms:
   *  - [[pin]] is eager: one `localCheckpoint`, filled when the memo is
@@ -23,19 +32,37 @@ import scala.collection.concurrent.TrieMap
   * eager planning pass, paid on every cold run for a copy read once.
   */
 object Memo {
-  private val clearers = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+  import org.apache.spark.sql.DataFrame
 
-  /** A registered memo map; `onEvict` runs per value on invalidation
-    * (unpersist cached DataFrames there — use [[release]] for DataFrame
-    * values so checkpoint-materialized frames actually free their blocks).
-    */
-  def map[K, V](onEvict: V => Unit): TrieMap[K, V] = {
-    val m = TrieMap.empty[K, V]
-    synchronized { clearers += (() => { m.values.foreach(onEvict); m.clear() }) }
-    m
+  private final class Entry(val value: Any, val evict: () => Unit)
+
+  private val registry = TrieMap.empty[Seq[Any], Entry]
+
+  /** The frame memo under (`name`, `parts`); evicts through [[release]]. */
+  def share(name: String, parts: Any*)(build: => DataFrame): DataFrame =
+    shareWith[DataFrame](name, parts: _*)(release)(build)
+
+  /** A memo of any value, evicted by `evict` on invalidation. */
+  def shareWith[V](name: String, parts: Any*)(evict: V => Unit)(build: => V): V =
+    registry.getOrElseUpdate(name +: parts, {
+      val v = build
+      new Entry(v, () => evict(v))
+    }).value.asInstanceOf[V]
+
+  /** Eviction for memos that hold a pair of frames. */
+  def releasePair(p: (DataFrame, DataFrame)): Unit = { release(p._1); release(p._2) }
+
+  def contains(name: String, parts: Any*): Boolean = registry.contains(name +: parts)
+
+  /** Drop one entry now, running its eviction. */
+  def evict(name: String, parts: Any*): Unit =
+    registry.remove(name +: parts).foreach(_.evict())
+
+  def invalidateAll(): Unit = synchronized {
+    val entries = registry.values.toList
+    registry.clear()
+    entries.foreach(_.evict())
   }
-
-  def invalidateAll(): Unit = synchronized { clearers.foreach(_.apply()) }
 
   /** The eager memo form: materialize `df` once as a local checkpoint and
     * return a frame over it that carries what the planner needs.
@@ -53,7 +80,7 @@ object Memo {
     * unchanged (the builders are deterministic). [[release]] frees the
     * checkpoint blocks.
     */
-  def pin(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  def pin(df: DataFrame): DataFrame =
     org.apache.spark.sql.graft.Bridge.measuredCheckpoint(df.localCheckpoint())
 
   /** The lazy memo form: hash-partition by `partCols`, sort within
@@ -63,8 +90,8 @@ object Memo {
     * that reads the frame (a symbol-window consumer at sf0.1: 4 jobs /
     * ~420 ms warm → 3 jobs / ~240 ms).
     */
-  def layout(df: org.apache.spark.sql.DataFrame,
-             partCols: Seq[String], sortCols: Seq[String]): org.apache.spark.sql.DataFrame = {
+  def layout(df: DataFrame,
+             partCols: Seq[String], sortCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
     df.repartition(partCols.map(col): _*)
       .sortWithinPartitions(sortCols.map(col): _*)
@@ -79,7 +106,7 @@ object Memo {
     * `LogicalRDD` leaves and unpersist their RDDs directly, in addition
     * to the CacheManager path (which frees a [[layout]]).
     */
-  def release(df: org.apache.spark.sql.DataFrame): Unit = {
+  def release(df: DataFrame): Unit = {
     import scala.util.control.NonFatal
     try df.unpersist() catch { case NonFatal(_) => () }
     try df.queryExecution.analyzed.foreach {

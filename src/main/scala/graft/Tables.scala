@@ -27,12 +27,10 @@ object Tables {
     * production scale this is also the §6 file-listing-cache posture:
     * re-listing a large table's files on every query is driver poison.
     */
-  private val readerCache =
-    Memo.map[(SparkSession, String), DataFrame](_ => ())
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    readerCache.getOrElseUpdate((spark, s"$dir/$name.parquet"),
-      spark.read.parquet(s"$dir/$name.parquet"))
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    Memo.shareWith[DataFrame]("Tables.reader", spark, path)(_ => ())(spark.read.parquet(path))
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = load(s, d, "nation")

@@ -24,11 +24,8 @@ object BacktestPack extends QueryPack {
     * the whole hourly backtest chain would run twice, and a bare
     * per-call .cache() would sit outside Memo eviction.
     */
-  private val portTermsCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def portTermsCached(s: SparkSession, d: String): DataFrame =
-    portTermsCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("BacktestPack.portTerms", s, d) {
       val bt = Backtester.run(Signals.maCrossPlain(Bars.ohlcvCached(s, d, 3600)))
       val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
       bt.groupBy("bucket_ms")
@@ -38,8 +35,13 @@ object BacktestPack extends QueryPack {
             .cast(dec38))
         .withColumn("chunk", expr("bucket_ms div 86400000"))
         .transform(graft.Memo.pin)
-    })
+    }
 
+
+  // quantization + exact long-split product sums shared by the memo
+  // builder below; see the q_feature_importance comment for the scheme
+  private val FeatDec = org.apache.spark.sql.types.DecimalType(38, 0)
+  private val FeatM = 2147483648L
 
   /** Session-memoized exact co-moment table for q_feature_importance
     * (r16): one row per (symbol, iv, feature) — symbols × 5 folds × 9
@@ -53,16 +55,8 @@ object BacktestPack extends QueryPack {
     * training-statistics frame, with per-run aggregation/window/join
     * work still downstream of it.
     */
-  private val featMomentCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
-  // quantization + exact long-split product sums shared by the memo
-  // builder below; see the q_feature_importance comment for the scheme
-  private val FeatDec = org.apache.spark.sql.types.DecimalType(38, 0)
-  private val FeatM = 2147483648L
-
   private def featureMomentsCached(s: SparkSession, d: String): DataFrame =
-    featMomentCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("BacktestPack.featureMoments", s, d) {
       val dec = FeatDec
       val M = FeatM
       def qL(c: org.apache.spark.sql.Column, scale: Double) =
@@ -105,7 +99,7 @@ object BacktestPack extends QueryPack {
       melted.groupBy("symbol", "iv", "feature")
         .agg(momAggs.head, momAggs.tail: _*)
         .transform(graft.Memo.pin)
-    })
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Oracle-pinned queries pin the PLAIN signal forms explicitly: the

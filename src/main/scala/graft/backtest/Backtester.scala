@@ -53,14 +53,11 @@ object Backtester {
     * pattern as Bars.ohlcvCached / TextPack.shinglesCached: one build
     * per session, every consumer reads the cache.
     */
-  private val maCrossCache =
-    graft.Memo.map[(org.apache.spark.sql.SparkSession, String), DataFrame](graft.Memo.release)
-
   def maCrossCached(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
     // plain form pinned: the oracled consumers' outputs must not depend
     // on catalog-statistics state (the adaptive route can flip to the
     // chunked prefix sums, which differ on exact comparison ties)
-    maCrossCache.getOrElseUpdate((s, d),
+    graft.Memo.share("Backtester.maCross", s, d)(
       graft.Memo.pin(run(Signals.maCrossPlain(graft.operators.Bars.ohlcvCached(s, d, 60)))))
 
   /** Input: bars with `signal`; output adds position/returns/costs/

@@ -23,11 +23,8 @@ object ExtrasPack extends QueryPack {
     * over 1-min bars) — q_signal_ensemble and q_strategy_comparison both
     * consume it; one window pass per session instead of one per query.
     */
-  private val allThreeCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def allThreeCached(s: SparkSession, d: String): DataFrame =
-    allThreeCache.getOrElseUpdate((s, d),
+    graft.Memo.share("ExtrasPack.allThree", s, d)(
       graft.Memo.pin(Signals.allThreePlain(bars1m(s, d))))
 
   /** Strategy suffixes of the wide three-strategy frame. */
@@ -42,11 +39,8 @@ object ExtrasPack extends QueryPack {
     * over bar-scale cached rows; the frame is the natural read surface
     * for any cross-strategy analysis (turnover, attribution).
     */
-  private val wideThreeCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def wideThreeCached(s: SparkSession, d: String): DataFrame =
-    wideThreeCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("ExtrasPack.wideThree", s, d) {
       val w = Window.partitionBy("symbol").orderBy("bucket_ms")
       val cum = w.rowsBetween(Window.unboundedPreceding, 0)
       val lagLayer = allThreeCached(s, d).select(
@@ -75,7 +69,7 @@ object ExtrasPack extends QueryPack {
         col("*") +: StratSfx.map { case (x, _) =>
           (exp(col(s"log_equity_$x") - col(s"peak_$x")) - 1).as(s"dd_$x")
         }: _*))
-    })
+    }
 
   /** EMA via a bounded 60-tap weighted sum of window lags — one sort per
     * symbol, no join (a rank-range self-join explodes to |bars|² per

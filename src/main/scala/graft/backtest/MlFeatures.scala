@@ -21,11 +21,8 @@ object MlFeatures {
     * q_ml_features and q_feature_importance (the seven sliding frames
     * are the expensive part; build once per session).
     */
-  private val cache =
-    graft.Memo.map[(org.apache.spark.sql.SparkSession, String), DataFrame](graft.Memo.release)
-
   def cached(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    cache.getOrElseUpdate((s, d),
+    graft.Memo.share("MlFeatures.features", s, d)(
       graft.Memo.pin(compute(graft.operators.Bars.ohlcvCached(s, d, 60))))
 
   def compute(bars: DataFrame): DataFrame = {

@@ -26,18 +26,11 @@ object PortfolioOpt {
     * the N² covariance join, and — for the three frontier consumers —
     * the whole grid-scoring pipeline.
     */
-  private val retsCache =
-    graft.Memo.map[DataFrame, DataFrame](graft.Memo.release)
   private def retsCached(bars: DataFrame): DataFrame =
-    retsCache.getOrElseUpdate(bars, Risk.barReturns(bars).cache())
+    graft.Memo.share("PortfolioOpt.rets", bars)(Risk.barReturns(bars).cache())
 
-  private val covCache =
-    graft.Memo.map[DataFrame, DataFrame](graft.Memo.release)
   private def covCached(bars: DataFrame): DataFrame =
-    covCache.getOrElseUpdate(bars, covFromRets(retsCached(bars)).cache())
-
-  private val frontierCache =
-    graft.Memo.map[(SparkSession, DataFrame, Int), (DataFrame, DataFrame)] { case (a, b) => graft.Memo.release(a); graft.Memo.release(b) }
+    graft.Memo.share("PortfolioOpt.cov", bars)(covFromRets(retsCached(bars)).cache())
 
   /** Pairwise annualized covariance/correlation matrix of per-symbol bar
     * returns, joined on time bucket (full N×N, both directions).
@@ -124,8 +117,8 @@ object PortfolioOpt {
 
   private def frontierWithGrid(spark: SparkSession, bars: DataFrame,
                                quarters: Int): (DataFrame, DataFrame) =
-    frontierCache.getOrElseUpdate((spark, bars, quarters),
-      buildFrontier(spark, bars, quarters))
+    graft.Memo.shareWith[(DataFrame, DataFrame)]("PortfolioOpt.frontier", spark, bars, quarters)(
+      graft.Memo.releasePair)(buildFrontier(spark, bars, quarters))
 
   private def buildFrontier(spark: SparkSession, bars: DataFrame,
                             quarters: Int): (DataFrame, DataFrame) = {
@@ -172,12 +165,9 @@ object PortfolioOpt {
     * the final join below; memoized rather than bare-per-call-cached so
     * Memo.invalidateAll owns eviction).
     */
-  private val rcCache =
-    graft.Memo.map[(DataFrame, Int), DataFrame](graft.Memo.release)
-
   private def rcGridCached(spark: SparkSession, bars: DataFrame,
                            quarters: Int): DataFrame =
-    rcCache.getOrElseUpdate((bars, quarters), {
+    graft.Memo.share("PortfolioOpt.rcGrid", bars, quarters) {
       val rets = retsCached(bars)
       val cov = covCached(bars)
       val symbols = symbolUniverse(muFromRets(rets))
@@ -196,7 +186,7 @@ object PortfolioOpt {
           .over(Window.partitionBy("grid_id"))))
         .withColumn("rc", col("weight") * col("marg") / col("pv"))
         .cache()
-    })
+    }
 
   def riskParityOptimize(spark: SparkSession, bars: DataFrame,
                          quarters: Int = 4): DataFrame = {

@@ -23,11 +23,8 @@ object RiskPack extends QueryPack {
     * Tiny (one row per symbol); expression-identical to Risk.varCvar /
     * Risk.volSizing so the oracles are unchanged.
     */
-  private val riskStatsCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def riskStats(s: SparkSession, d: String): DataFrame =
-    riskStatsCache.getOrElseUpdate((s, d),
+    graft.Memo.share("RiskPack.riskStats", s, d)(
       // built from Risk's own expression lists (varCvarAggs +
       // annStatsAggs via varCvarOn's extraAggs) — one definition per
       // formula, so this fused frame cannot desync from the oracled
@@ -40,11 +37,8 @@ object RiskPack extends QueryPack {
     * into the two alert families of q_risk_alert_log (a bare per-call
     * .cache() here would sit outside Memo eviction).
     */
-  private val dailyRiskCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def dailyRiskCached(s: SparkSession, d: String): DataFrame =
-    dailyRiskCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("RiskPack.dailyRisk", s, d) {
       val cum = Window.partitionBy("symbol").orderBy("bucket_ms")
         .rowsBetween(Window.unboundedPreceding, 0)
       btMaCross(s, d)
@@ -53,7 +47,7 @@ object RiskPack extends QueryPack {
         .groupBy("symbol", "day_ms")
         .agg(sum(col("net_returns")).as("day_net"), min(col("dd")).as("day_min_dd"))
         .cache()
-    })
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_var_cvar" -> ((s, d) =>

@@ -84,19 +84,15 @@ object Cleaner {
         count(lit(1)).as("total")
       )
 
-  /** Session-memoized gap-run frame: all three fill queries derive from
-    * the same exploded spine (keyed by the memoized bars instance) — one
-    * build per (session, dataset) instead of three.
-    */
-  private val gapRunsCache = graft.Memo.map[DataFrame, DataFrame](graft.Memo.release)
-  private def gapRunsCached(bars: DataFrame): DataFrame =
-    gapRunsCache.getOrElseUpdate(bars, gapRuns(bars).cache())
-
   /** Minute spine per symbol with forward-filled close (cleaner.py:171,
     * method="ffill"): the previous bracket of each spine row's gap run.
+    * The `*FromRuns` forms take [[gapRuns]] already built, so the three
+    * fills can share one spine.
     */
-  def fillMissingMinutes(bars: DataFrame): DataFrame =
-    gapRunsCached(bars).select(
+  def fillMissingMinutes(bars: DataFrame): DataFrame = ffillFromRuns(gapRuns(bars))
+
+  private[etl] def ffillFromRuns(runs: DataFrame): DataFrame =
+    runs.select(
       col("symbol"),
       col("bucket_ms"),
       col("pv").as("close_ffill"),
@@ -108,8 +104,10 @@ object Cleaner {
     * for on-spine bars. Gap rows always have a next bar (the spine ends
     * at the last known bar), so no null case.
     */
-  def fillMissingBfill(bars: DataFrame): DataFrame =
-    gapRunsCached(bars).select(
+  def fillMissingBfill(bars: DataFrame): DataFrame = bfillFromRuns(gapRuns(bars))
+
+  private[etl] def bfillFromRuns(runs: DataFrame): DataFrame =
+    runs.select(
       col("symbol"),
       col("bucket_ms"),
       when(col("bucket_ms") === col("pt"), col("pv")).otherwise(col("nv")).as("close_bfill"),
@@ -121,8 +119,10 @@ object Cleaner {
     * prev + (next − prev) · (t − t_prev)/(t_next − t_prev); both brackets
     * ride along on the gap-run row, so there is no window over the spine.
     */
-  def fillMissingInterp(bars: DataFrame): DataFrame =
-    gapRunsCached(bars).select(
+  def fillMissingInterp(bars: DataFrame): DataFrame = interpFromRuns(gapRuns(bars))
+
+  private[etl] def interpFromRuns(runs: DataFrame): DataFrame =
+    runs.select(
       col("symbol"),
       col("bucket_ms"),
       graft.functions.Port.r(

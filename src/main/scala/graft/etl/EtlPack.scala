@@ -15,13 +15,18 @@ object EtlPack extends QueryPack {
   /** Session-memoized dedup stage for the clean-pipeline funnel (fans out
     * into four downstream counts/aggregates within the query).
     */
-  private val dedupStageCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def dedupStageCached(s: SparkSession, d: String): DataFrame =
-    dedupStageCache.getOrElseUpdate((s, d),
+    graft.Memo.share("EtlPack.dedupStage", s, d)(
       Cleaner.dedupKeepFirst(Tables.ticks(s, d))
         .select(col("symbol"), col("first_price").as("price")).cache())
+
+  /** Session-memoized gap-run frame over the 1-min bars: all three fill
+    * queries derive from the same exploded spine — one build per
+    * (session, dataset) instead of three.
+    */
+  private def gapRunsCached(s: SparkSession, d: String): DataFrame =
+    graft.Memo.share("EtlPack.gapRuns", s, d)(
+      Cleaner.gapRuns(Bars.ohlcvCached(s, d, 60)).cache())
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_normalize_trades" -> ((s, d) =>
@@ -49,13 +54,13 @@ object EtlPack extends QueryPack {
     "q_validate_prices" -> ((s, d) =>
       Cleaner.validatePrices(Tables.ticks(s, d), 10.0, 180.0).orderBy("symbol")),
     "q_fill_missing_minutes" -> ((s, d) =>
-      Cleaner.fillMissingMinutes(Bars.ohlcvCached(s, d, 60))
+      Cleaner.ffillFromRuns(gapRunsCached(s, d))
         .orderBy("symbol", "bucket_ms")),
     "q_fill_missing_bfill" -> ((s, d) =>
-      Cleaner.fillMissingBfill(Bars.ohlcvCached(s, d, 60))
+      Cleaner.bfillFromRuns(gapRunsCached(s, d))
         .orderBy("symbol", "bucket_ms")),
     "q_fill_missing_interp" -> ((s, d) =>
-      Cleaner.fillMissingInterp(Bars.ohlcvCached(s, d, 60))
+      Cleaner.interpFromRuns(gapRunsCached(s, d))
         .orderBy("symbol", "bucket_ms")),
     "q_clean_pipeline" -> ((s, d) => {
       // composed cleaning chain (cleaner.py:230 clean_pipeline_pandas,

@@ -154,18 +154,12 @@ object Ann {
     val r = res.cache()
     r.count()
     scaffolding.foreach(_.unpersist(blocking = false))
-    // the result cache itself is Memo-tracked: repeated calls don't leak
-    // past invalidateAll, and a mutable-input session can't re-serve a
-    // stale pair table from the CacheManager (same contract as
-    // AnnPack.embCache)
-    liveResults.put(r, r)
-    r
+    // the result cache itself is a Memo entry keyed by the frame (lifecycle
+    // tracking only, no dedup): repeated calls don't leak past
+    // invalidateAll, and a mutable-input session can't re-serve a stale
+    // pair table from the CacheManager (same contract as AnnPack.embCached)
+    graft.Memo.share("Ann.liveResult", r)(r)
   }
-
-  /** Caches handed out by the self-cleaning entry point, keyed by the
-    * frame itself (no dedup — lifecycle tracking only).
-    */
-  private val liveResults = graft.Memo.map[DataFrame, DataFrame](graft.Memo.release)
 
   /** [[hyperplaneNearDup]] plus its cache scaffolding (the signature and
     * size-filtered bucket frames) so a caller that materializes the
@@ -262,24 +256,17 @@ object Ann {
     * three, and the interior a2/c2 caches are Memo-registered (bare
     * per-call caches lingered for the async ContextCleaner — the same
     * nondeterministic-bench-neighborhood debt r07 removed from dedup).
-    */
-  private val kmeansCache =
-    graft.Memo.map[(org.apache.spark.sql.SparkSession,
-                    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-                   (DataFrame, DataFrame)] {
-      case (a, c) => graft.Memo.release(a); graft.Memo.release(c)
-    }
-
-  /** Keyed on the canonicalized plan OBJECT (structural equality — the
+    *
+    * Keyed on the canonicalized plan OBJECT (structural equality — the
     * definition `sameResult` uses), not its toString: plan rendering is
     * truncated by spark.sql.debug.maxToStringFields ("... N more
     * fields"), so two distinct corpora could collide to one string key
     * and silently serve clustering computed over the wrong corpus.
     */
   def kmeansCellsCached(emb: DataFrame, cells: Int): (DataFrame, DataFrame) =
-    kmeansCache.getOrElseUpdate(
-      (emb.sparkSession, emb.queryExecution.logical.canonicalized, cells),
-      kmeansCells(emb, cells))
+    graft.Memo.shareWith[(DataFrame, DataFrame)]("Ann.kmeansCells",
+      emb.sparkSession, emb.queryExecution.logical.canonicalized, cells)(
+      graft.Memo.releasePair)(kmeansCells(emb, cells))
 
   /** Semantic cluster audit: per-cell membership count plus snapped
     * mean/min cosine-to-centroid over the sqrt(n)-style k-means cells —
@@ -442,20 +429,13 @@ object Ann {
     (a2, c2)
   }
 
-  private val pqCache =
-    graft.Memo.map[(org.apache.spark.sql.SparkSession,
-                    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int, Int),
-                   (DataFrame, DataFrame)] {
-      case (a, c) => graft.Memo.release(a); graft.Memo.release(c)
-    }
-
   /** Session-memoized PQ training, keyed like kmeansCellsCached (the
     * canonicalized plan OBJECT, not its truncatable string form).
     */
   def pqCodebooksCached(emb: DataFrame, m: Int, dsub: Int, k: Int): (DataFrame, DataFrame) =
-    pqCache.getOrElseUpdate(
-      (emb.sparkSession, emb.queryExecution.logical.canonicalized, m, dsub, k),
-      pqCodebooks(emb, m, dsub, k))
+    graft.Memo.shareWith[(DataFrame, DataFrame)]("Ann.pqCodebooks",
+      emb.sparkSession, emb.queryExecution.logical.canonicalized, m, dsub, k)(
+      graft.Memo.releasePair)(pqCodebooks(emb, m, dsub, k))
 
   /** ADC (asymmetric distance computation) top-k: queries stay exact,
     * the corpus is its codes. The per-query distance table (M·k snapped
@@ -518,18 +498,13 @@ object Ann {
     * memo key the same instance every call, which is the stability
     * contract every other ANN memo already relies on.
     */
-  private val residCache =
-    graft.Memo.map[(org.apache.spark.sql.SparkSession,
-                    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-                   DataFrame](_ => ())
-
   def ivfPqTopK(emb: DataFrame, nQueries: Int, k: Int, cells: Int = 8,
                 m: Int = 8, dsub: Int = 8, pqK: Int = 8, nprobe: Int = 2): DataFrame = {
     val (assigned, cent) = kmeansCellsCached(emb, cells)
     // residuals x - c_cell(x): what PQ encodes (far lower variance than
     // raw vectors once the coarse term is factored out)
-    val resid = residCache.getOrElseUpdate(
-      (emb.sparkSession, emb.queryExecution.logical.canonicalized, cells),
+    val resid = graft.Memo.shareWith[DataFrame]("Ann.ivfPqResiduals",
+      emb.sparkSession, emb.queryExecution.logical.canonicalized, cells)(_ => ())(
       emb.join(assigned, "vec_id").join(broadcast(cent), "cell")
         .select(col("vec_id"), zip_with(col("e"), col("ce"), (x, y) => x - y).as("e")))
     val (codes, books) = pqCodebooksCached(resid, m, dsub, pqK)

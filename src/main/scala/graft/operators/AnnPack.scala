@@ -34,15 +34,6 @@ object AnnPack extends QueryPack {
     Ann.withNorm(Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("e")))
 
-  /** Session-memoized CACHED embedding frame shared by the IVF and
-    * near-dup pipelines. Registered in a Memo map so invalidateAll
-    * unpersists it — a bare `.cache()` here would survive eviction in the
-    * CacheManager and re-serve stale embedding data to the rebuilt plan
-    * (the staleness hazard invalidateAll exists to close).
-    */
-  private val embCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   /** Session-memoized degree-8 kNN edge list for the beam-search GRAPH
     * (r17): the index build (LSH pool + two-level degree rank) is the
     * shared infrastructure — the beam SEARCH itself (IVF-probe seeding +
@@ -51,25 +42,24 @@ object AnnPack extends QueryPack {
     * query may be a bare memo read; the r14-r16 beamCache memoized the
     * query's own output).
     */
-  private val beamEdgeCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def beamEdgesCached(s: SparkSession, d: String): DataFrame =
-    beamEdgeCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("AnnPack.beamEdges", s, d) {
       val e = Ann.knnGraphEdges(candScoresCached(s, d), degree = 8)
       // knnGraphEdges returns a plain cached frame; pin it so plan
       // lineage truncates, then free the interim cache
       val pinned = graft.Memo.pin(e)
       e.unpersist(blocking = false)
       pinned
-    })
+    }
 
-  /** Session-memoized PHash56 signature table for q_media_neardup (r16). */
-  private val phashCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
+  /** Session-memoized CACHED embedding frame shared by the IVF and
+    * near-dup pipelines. A Memo entry, so invalidateAll unpersists
+    * it — a bare `.cache()` here would survive eviction in the
+    * CacheManager and re-serve stale embedding data to the rebuilt plan
+    * (the staleness hazard invalidateAll exists to close).
+    */
   private[operators] def embCached(s: SparkSession, d: String): DataFrame =
-    embCache.getOrElseUpdate((s, d), emb(s, d).cache())
+    graft.Memo.share("AnnPack.emb", s, d)(emb(s, d).cache())
 
   /** Session-memoized exact brute-force cosine top-10 for the 10 bench
     * queries (r16): used as shared GROUND-TRUTH infrastructure by
@@ -80,11 +70,8 @@ object AnnPack extends QueryPack {
     * the brute-force pass, so its bench row prices the scan it claims
     * to; the memo fill rides the first ground-truth consumer instead.
     */
-  private val bruteTopCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private[operators] def bruteTopCached(s: SparkSession, d: String): DataFrame =
-    bruteTopCache.getOrElseUpdate((s, d),
+    graft.Memo.share("AnnPack.bruteTop", s, d)(
       graft.Memo.pin(Ann.bruteTopK(embCached(s, d), nQueries = 10, k = 10)))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -298,7 +285,7 @@ object AnnPack extends QueryPack {
       // costliest scan in this query — and the signature frame is one
       // small row per doc, the natural cache unit (same contract as
       // DedupPack's simhashCached).
-      val ph = phashCache.getOrElseUpdate((s, d),
+      val ph = graft.Memo.share("AnnPack.phash", s, d)(
         Multimodal.perceptualHash(Tables.documents(s, d))
           .withColumnRenamed("phash", "simhash").transform(graft.Memo.pin))
       DedupPack.simhashPairs(ph, emitBound = 56L)
@@ -319,9 +306,10 @@ object AnnPack extends QueryPack {
     * cached frames are freed deterministically — they otherwise lingered
     * for the async ContextCleaner and their cleanup landed on whichever
     * bench queries ran next (the r06 dedup-neighborhood variance).
+    * Two memo names: the full pool and the 0.35-thresholded tier.
     */
-  private val nearDupCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
+  private val CandPool = "AnnPack.candScores"
+  private val CandTier = "AnnPack.nearDupTier"
 
   /** UNthresholded LSH candidate scores (v1 < v2, snapped cosine) — ONE
     * hyperplane pass per session shared by the near-dup filter and the
@@ -368,33 +356,30 @@ object AnnPack extends QueryPack {
   }
 
   private[operators] def candScoresCached(s: SparkSession, d: String): DataFrame =
-    nearDupCache.getOrElseUpdate((s, d), {
+    graft.Memo.share(CandPool, s, d) {
       val r = buildCandScores(s, d, threshold = -2.0)
       // the thresholded tier is now a free filter of the pool — evict
       // the redundant pinned copy (later dedup calls take the pool path)
-      nearDupThreshCache.remove((s, d)).foreach(_.unpersist(blocking = false))
+      graft.Memo.evict(CandTier, s, d)
       r
-    })
+    }
 
   /** Thresholded tier for the dedup consumers. If the full pool is
     * already (or will be) pinned by this session, dedup rides it as a
     * filter; otherwise only the thresholded frame is materialized.
     */
-  private val nearDupThreshCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def nearDupCached(s: SparkSession, d: String): DataFrame =
-    if (nearDupCache.contains((s, d)))
+    if (graft.Memo.contains(CandPool, s, d))
       candScoresCached(s, d).filter(col("cosine") >= 0.35)
     else
-      nearDupThreshCache.getOrElseUpdate((s, d),
+      graft.Memo.share(CandTier, s, d)(
         buildCandScores(s, d, threshold = 0.35))
 
   /** (full pool resident, thresholded tier resident) — the two-tier
     * contract probe for DedupEvictionSpec; not part of the API.
     */
   private[graft] def nearDupTierState(s: SparkSession, d: String): (Boolean, Boolean) =
-    (nearDupCache.contains((s, d)), nearDupThreshCache.contains((s, d)))
+    (graft.Memo.contains(CandPool, s, d), graft.Memo.contains(CandTier, s, d))
 
   /** The shared 2-round k-means mirror prefix (CTEs c..cn2),
     * parameterized on the cell-count expression — `"8"` for the pinned

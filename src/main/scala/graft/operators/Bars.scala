@@ -51,14 +51,11 @@ object Bars {
     * pattern as the memoized jaccard pairs. Cache is bars-sized
     * (symbols × buckets), never tick-sized.
     */
-  private val barsCache =
-    graft.Memo.map[(SparkSession, String, Long), DataFrame](graft.Memo.release)
-
   def ohlcvCached(s: SparkSession, d: String, seconds: Long): DataFrame =
     // laid out for the ~30 consumers that window/aggregate by symbol over
     // bucket_ms order: partitioned by symbol, sorted by (symbol,
     // bucket_ms), so each consumer elides its Exchange+Sort (Memo.layout).
-    barsCache.getOrElseUpdate((s, d, seconds),
+    graft.Memo.share("Bars.ohlcv", s, d, seconds)(
       graft.Memo.layout(ohlcv(graft.Tables.ticks(s, d), seconds),
         Seq("symbol"), Seq("symbol", "bucket_ms")))
 

@@ -16,11 +16,8 @@ object BarsPack extends QueryPack {
     * aggregate ran once per warm pass before r15 (the only tick-scan
     * left in its chain), now once per session.
     */
-  private val minuteDollarCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def minuteDollarCached(s: SparkSession, d: String): DataFrame =
-    minuteDollarCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("BarsPack.minuteDollar", s, d) {
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       graft.Memo.pin(Micro.signedTicksCached(s, d)
         .groupBy(col("symbol"),
@@ -28,7 +25,7 @@ object BarsPack extends QueryPack {
           expr("ts div 60000000000 * 60000").as("bucket_ms"))
         .agg(sum(col("dollar_c").cast(dec)).as("dc"),
           sum(col("vol").cast(dec)).as("v")))
-    })
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_ohlcv_1min" -> ((s, d) =>

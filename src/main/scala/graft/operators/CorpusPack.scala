@@ -56,11 +56,8 @@ object CorpusPack extends QueryPack {
   /** Session-memoized 5-gram shingle table (same pattern as
     * TextPack.shinglesCached for the 3-gram dedup shingles).
     */
-  private val shingle5Cache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def shingles5Cached(s: SparkSession, d: String): DataFrame =
-    shingle5Cache.getOrElseUpdate((s, d),
+    graft.Memo.share("CorpusPack.shingles5", s, d)(
       graft.Memo.pin(shingles5(Tables.documents(s, d))))
 
   /** Session-memoized eval-contamination hit pairs (r16): one
@@ -76,11 +73,8 @@ object CorpusPack extends QueryPack {
     * grouped this same join by doc_id, and coverage's semi-join count
     * per eval doc equals countDistinct(shingle) over the hits.
     */
-  private val evalHitCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def evalHitsCached(s: SparkSession, d: String): DataFrame =
-    evalHitCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("CorpusPack.evalHits", s, d) {
       val shd = shingles5Cached(s, d)
       val ev = shd.filter(col("source") === EvalSource)
         .select(col("doc_id").as("eval_doc"), col("shingle"))
@@ -89,7 +83,7 @@ object CorpusPack extends QueryPack {
         .join(ev, "shingle")
         .select("doc_id", "eval_doc", "shingle")
         .transform(graft.Memo.pin)
-    })
+    }
 
   /** Session-memoized per-doc 5-gram counts split by side (r16): the
     * n_shingles marginals of q_decontaminate (corpus side) and
@@ -97,18 +91,15 @@ object CorpusPack extends QueryPack {
     * full cached shingle table just to recount an unchanging per-doc
     * dimension frame (~14 s of task time at sf0.1 in the r16 profile).
     */
-  private val shingleSizeCache =
-    graft.Memo.map[(SparkSession, String, Boolean), DataFrame](graft.Memo.release)
-
   private def shingleSizes5Cached(s: SparkSession, d: String,
                                   evalSide: Boolean): DataFrame =
-    shingleSizeCache.getOrElseUpdate((s, d, evalSide), {
+    graft.Memo.share("CorpusPack.shingleSizes5", s, d, evalSide) {
       val side = if (evalSide) col("source") === EvalSource
                  else col("source") =!= EvalSource
       shingles5Cached(s, d).filter(side)
         .groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
         .transform(graft.Memo.pin)
-    })
+    }
 
   /** Combined per-(src1, src2) shared-shingle counts AND per-source
     * distinct-shingle marginals (src2 null) in ONE pass: groupBy(shingle)
@@ -120,11 +111,8 @@ object CorpusPack extends QueryPack {
     * Memoized because the final frame is ~C(sources,2)+sources rows but
     * its lineage is corpus-scale and feeds three consumers.
     */
-  private val overlapCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def overlapAggCached(s: SparkSession, d: String): DataFrame =
-    overlapCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("CorpusPack.overlapAgg", s, d) {
       val perShingle = shingles5Cached(s, d)
         .groupBy("shingle")
         .agg(sort_array(collect_set(col("source"))).as("srcs"))
@@ -138,7 +126,7 @@ object CorpusPack extends QueryPack {
         .groupBy("src1", "src2")
         .agg(count(lit(1)).as("n"))
         .transform(graft.Memo.pin)
-    })
+    }
 
   /** DuckDB mirror of [[shingles5]] (final CTE: shd5). */
   private val Shingles5Cte: String =

@@ -105,11 +105,8 @@ object DedupPack extends QueryPack {
     * a bare per-call .cache() here would linger for the async
     * ContextCleaner — the r07 bench-neighborhood debt class).
     */
-  private val simhashCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def simhashCached(s: SparkSession, d: String): DataFrame =
-    simhashCache.getOrElseUpdate((s, d), graft.Memo.pin(simhash(Tables.documents(s, d))))
+    graft.Memo.share("DedupPack.simhash", s, d)(graft.Memo.pin(simhash(Tables.documents(s, d))))
 
   /** Output-stage partner cap for the simhash band join: each doc emits
     * at most this many pairs per (band, key) bucket, partners taken in
@@ -157,12 +154,8 @@ object DedupPack extends QueryPack {
     * memo). The VERIFY/cap/distinct tail — the query's own output — stays
     * per-run.
     */
-  private val bandFrameCache =
-    graft.Memo.map[(org.apache.spark.sql.SparkSession, DataFrame), DataFrame](
-      graft.Memo.release)
-
   private def cappedBandsCached(sh: DataFrame): DataFrame =
-    bandFrameCache.getOrElseUpdate((sh.sparkSession, sh), {
+    graft.Memo.share("DedupPack.cappedBands", sh.sparkSession, sh) {
       val classes = sh.groupBy("simhash").agg(count(lit(1)).as("csz"))
       val sigBands = classes.withColumn("band", explode(sequence(lit(0), lit(3))))
         .withColumn("key", expr("(simhash >> (band * 14)) & 16383"))
@@ -175,7 +168,7 @@ object DedupPack extends QueryPack {
         .withColumn("bsz", sum("csz").over(wBK))
         .filter(col("bsz") <= BucketCap)
         .select("simhash", "band", "key"))
-    })
+    }
 
   def simhashPairs(sh: DataFrame, emitBound: Long = 6L): DataFrame = {
     // Class-level band join (r12): docs sharing a signature are ONE row
@@ -212,15 +205,6 @@ object DedupPack extends QueryPack {
       .orderBy("doc1", "doc2")
   }
 
-  /** Session-memoized LSH candidate pairs (band-bucket collisions with
-    * match counts) — referenced twice by the verification join below; a
-    * bare per-call .cache() here lingered for the async ContextCleaner
-    * (the r07 bench-neighborhood debt class) and re-derived the
-    * signatures every call.
-    */
-  private val candCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   /** Bucket cap for the band self-joins (minhash AND simhash): identical
     * signatures form one bucket, and at web scale a boilerplate/empty-doc
     * group repeated millions of times would make the same-sig self-join
@@ -250,15 +234,18 @@ object DedupPack extends QueryPack {
     * feeds the band keys (via candsCached) AND the calibration audit's
     * per-pair match count, which self-joins it; fixed 32 rows per doc.
     */
-  private val sigCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def sigsCached(s: SparkSession, d: String): DataFrame =
-    sigCache.getOrElseUpdate((s, d),
+    graft.Memo.share("DedupPack.sigs", s, d)(
       graft.Memo.pin(minhashFromShingles(TextPack.shinglesCached(s, d))))
 
+  /** Session-memoized LSH candidate pairs (band-bucket collisions with
+    * match counts) — referenced twice by the verification join below; a
+    * bare per-call .cache() here lingered for the async ContextCleaner
+    * (the r07 bench-neighborhood debt class) and re-derived the
+    * signatures every call.
+    */
   private def candsCached(s: SparkSession, d: String): DataFrame =
-    candCache.getOrElseUpdate((s, d),
+    graft.Memo.share("DedupPack.cands", s, d)(
       graft.Memo.pin(lshCandidates(bandSignatures(sigsCached(s, d)))))
 
   /** Session-memoized exact shingle-intersection counts for the LSH
@@ -268,18 +255,15 @@ object DedupPack extends QueryPack {
     * heaviest stage of either query. One fill serves both; rows are
     * bounded by the candidate set, the same contract as candsCached.
     */
-  private val interCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def interCached(s: SparkSession, d: String): DataFrame =
-    interCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("DedupPack.inter", s, d) {
       val shd = TextPack.shinglesCached(s, d)
       candsCached(s, d).select("doc1", "doc2")
         .join(shd.select(col("doc_id").as("doc1"), col("shingle")), "doc1")
         .join(shd.select(col("doc_id").as("doc2"), col("shingle")), Seq("doc2", "shingle"))
         .groupBy("doc1", "doc2").agg(count(lit(1)).as("inter"))
         .cache()
-    })
+    }
 
   /** Per-doc distinct-shingle counts — the sz1/sz2 join sides both LSH
     * queries attach. Delegates to TextPack's shared session memo (r16):

@@ -17,11 +17,8 @@ object EventsPack extends QueryPack {
     * shared by q_dau_wau and q_dau_wau_approx (result is at most
     * |users|×|days| rows, tiny next to the event stream).
     */
-  private val userDaysCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def userDaysCached(s: SparkSession, d: String): DataFrame =
-    userDaysCache.getOrElseUpdate((s, d),
+    graft.Memo.share("EventsPack.userDays", s, d)(
       Tables.events(s, d)
         .select(col("user_id"), expr("ts div 86400000000000").as("day"))
         .distinct().cache())
@@ -290,11 +287,8 @@ object EventsPack extends QueryPack {
     * values). Days-scale rows. See the q_dau_wau scaladoc for the
     * first-activity-in-window derivation.
     */
-  private val dauWauCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def dauWauExact(s: SparkSession, d: String): DataFrame =
-    dauWauCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("EventsPack.dauWauExact", s, d) {
       val w = Window.partitionBy("user_id").orderBy("day")
       graft.Memo.pin(userDaysCached(s, d)
         .withColumn("lo",
@@ -309,7 +303,7 @@ object EventsPack extends QueryPack {
         .filter(col("dau") > 0)
         .select((col("d") * 86400000L).as("day_ms"), col("dau"), col("wau"),
           (col("dau") / col("wau")).as("stickiness")))
-    })
+    }
 
   /** [[dauWauApprox]] over an already-distinct (user_id, day) frame —
     * lets the pack share one memoized distinct pass with q_dau_wau.

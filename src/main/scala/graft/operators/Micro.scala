@@ -140,12 +140,9 @@ object Micro {
     * throughout, so every cum column is bit-identical to the per-query
     * exclCum it replaces.
     */
-  private val cumCache =
-    graft.Memo.map[(SparkSession, String, Long), DataFrame](graft.Memo.release)
-
   def cumTicksCached(s: SparkSession, d: String,
                      chunkNs: Long = ChunkNs): DataFrame =
-    cumCache.getOrElseUpdate((s, d, chunkNs), {
+    graft.Memo.share("Micro.cumTicks", s, d, chunkNs) {
       val wIn = Window.partitionBy("symbol", "_ck").orderBy("ts", "event_id")
         .rowsBetween(Window.unboundedPreceding, -1)
       val wc = Window.partitionBy("symbol").orderBy("_ck")
@@ -174,7 +171,7 @@ object Micro {
             .as("cum_vol_prev"),
           (coalesce(sum(col("sv")).over(wIn), lit(0L)) + col("_offsv"))
             .as("cum_sv_prev")))
-    })
+    }
 
   /** Ticks with `dpc` = cent-price diff vs the previous tick of the same
     * symbol (global stream order, null on the symbol's first tick) and
@@ -250,12 +247,9 @@ object Micro {
     * full tick feed). One fill per (session, dir, chunk) serves both;
     * Memo owns eviction like every other session cache.
     */
-  private val signedCache =
-    graft.Memo.map[(SparkSession, String, Long), DataFrame](graft.Memo.release)
-
   def signedTicksCached(s: SparkSession, d: String,
                         chunkNs: Long = ChunkNs): DataFrame =
-    signedCache.getOrElseUpdate((s, d, chunkNs),
+    graft.Memo.share("Micro.signedTicks", s, d, chunkNs)(
       graft.Memo.pin(signedTicks(s, d, chunkNs)))
 
   def tickRuleFlow(s: SparkSession, d: String, chunkNs: Long = ChunkNs): DataFrame =
@@ -353,11 +347,8 @@ object Micro {
     * per-query windows they replace. Bar-scale rows — the cache is the
     * bars-level footprint class, not ticks.
     */
-  private val barLagCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def barCentLagsCached(s: SparkSession, d: String): DataFrame =
-    barLagCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("Micro.barCentLags", s, d) {
       val w = Window.partitionBy("symbol").orderBy("bucket_ms")
       // pinned, as cumTicksCached: the ACF/VR aggregates read a shallow scan
       graft.Memo.pin(Bars.ohlcvCached(s, d, 60)
@@ -365,7 +356,7 @@ object Micro {
           floor(col("close") * 100 + lit(0.5)).cast("long").as("cents"))
         .select(col("symbol") +: col("bucket_ms") +: col("cents") +:
           (1 to BarLags).map(k => lag(col("cents"), k).over(w).as(s"c$k")): _*))
-    })
+    }
 
   /** Lo-MacKinlay variance ratio VR(q) = Var(q-period diff)/(q·Var(1))
     * per symbol on minute-bar cent diffs, q ∈ {2, 5, 10} — VR < 1 flags

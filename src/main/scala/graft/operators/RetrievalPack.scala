@@ -61,11 +61,8 @@ object RetrievalPack extends QueryPack {
     *         * ((tf * (K1+1)) / (tf + K1 * (1 - B + B * dl / avgdl)))
     *         * 1e6 + 0.5)
     */
-  private val tfCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def tfScoredCached(s: SparkSession, d: String): DataFrame =
-    tfCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("RetrievalPack.tfScored", s, d) {
       val toks = Tables.documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       val tf = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
@@ -85,7 +82,25 @@ object RetrievalPack extends QueryPack {
               lit(1e6) + 0.5).cast("long"))
         .select("doc_id", "tok", "tf", "dl", "df", "u")
         .transform(graft.Memo.pin)
-    })
+    }
+
+  /** Session-memoized symmetrized top-3 kNN edge frame
+    * (vec_id, nbr, cosine, rank) over the shared LSH pool — ONE
+    * two-level rank serves q_knn_graph, q_knn_purity AND the PageRank
+    * edge build (r12: the 30x rehearsal measured each consumer paying
+    * the full 12-15 s rank per WARM call because only the pool, not
+    * the ranked graph, was memoized). Two-level because a hot vector's
+    * partner list is bounded by bands x bucket cap (~48k worst case)
+    * and must not sort in one task; same top-3 set as a global rank.
+    */
+  private def knnEdgesCached(s: SparkSession, d: String): DataFrame =
+    graft.Memo.share("RetrievalPack.knnEdges", s, d) {
+      val e = AnnPack.candScoresCached(s, d)
+      val dirs = e.select(col("v1").as("vec_id"), col("v2").as("nbr"), col("cosine"))
+        .unionByName(e.select(col("v2").as("vec_id"), col("v1").as("nbr"), col("cosine")))
+      twoLevelRank(dirs, Seq("vec_id"), k = 3, score = "cosine", id = "nbr")
+        .transform(graft.Memo.pin)
+    }
 
   /** Session-memoized PageRank table over the kNN top-3 graph — the
     * q_graph_rank result frame (vec_id, r_u).
@@ -116,32 +131,8 @@ object RetrievalPack extends QueryPack {
     * iteration counts). Recompute lineage stays live (plain caches), so
     * an evicted partition recomputes instead of failing.
     */
-  private val rankCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
-  /** Session-memoized symmetrized top-3 kNN edge frame
-    * (vec_id, nbr, cosine, rank) over the shared LSH pool — ONE
-    * two-level rank serves q_knn_graph, q_knn_purity AND the PageRank
-    * edge build (r12: the 30x rehearsal measured each consumer paying
-    * the full 12-15 s rank per WARM call because only the pool, not
-    * the ranked graph, was memoized). Two-level because a hot vector's
-    * partner list is bounded by bands x bucket cap (~48k worst case)
-    * and must not sort in one task; same top-3 set as a global rank.
-    */
-  private val knnEdgeCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
-  private def knnEdgesCached(s: SparkSession, d: String): DataFrame =
-    knnEdgeCache.getOrElseUpdate((s, d), {
-      val e = AnnPack.candScoresCached(s, d)
-      val dirs = e.select(col("v1").as("vec_id"), col("v2").as("nbr"), col("cosine"))
-        .unionByName(e.select(col("v2").as("vec_id"), col("v1").as("nbr"), col("cosine")))
-      twoLevelRank(dirs, Seq("vec_id"), k = 3, score = "cosine", id = "nbr")
-        .transform(graft.Memo.pin)
-    })
-
   private def graphRankCached(s: SparkSession, d: String): DataFrame =
-    rankCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("RetrievalPack.graphRank", s, d) {
       val dirs = knnEdgesCached(s, d)
         .select(col("vec_id").as("src"), col("nbr").as("dst"))
       val emb = AnnPack.embCached(s, d)
@@ -172,7 +163,7 @@ object RetrievalPack extends QueryPack {
       // the edge cache is scaffolding — free it now, recompute is live
       edges.unpersist(blocking = false)
       ranks
-    })
+    }
 
   /** Deterministic random-negative partner per anchor: for each anchor
     * id q (vec_id < 10), partner(q) = argmin over OBSERVED vec_ids v ≠ q
@@ -221,11 +212,8 @@ object RetrievalPack extends QueryPack {
     * aggregate behind it is a full pass over the cached tf table —
     * filled once per session; the frame is ≤ 10·10 rows.
     */
-  private val lexTopCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def lexTopCached(s: SparkSession, d: String): DataFrame =
-    lexTopCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("RetrievalPack.lexTop", s, d) {
       val tf = tfScoredCached(s, d)
       val qtok = tf.filter(col("doc_id") < 10)
         .select(col("doc_id").as("q_id"), col("tok")).distinct()
@@ -237,7 +225,7 @@ object RetrievalPack extends QueryPack {
         score = "score_u", id = "doc_id")
         .select(col("q_id"), col("doc_id"), col("rank").as("lex_rank"))
         .transform(graft.Memo.pin)
-    })
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_bm25_topk" -> ((s, d) => {

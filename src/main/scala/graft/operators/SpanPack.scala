@@ -62,11 +62,8 @@ object SpanPack extends QueryPack {
     * q_dup_stats both consume it, so a session running both (Verify,
     * Bench) builds the coverage join and merge windows once.
     */
-  private val spanCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def spansCached(s: SparkSession, d: String): DataFrame =
-    spanCache.getOrElseUpdate((s, d),
+    graft.Memo.share("SpanPack.spans", s, d)(
       dupSpansFrom(TextPack.posShinglesCached(s, d)
         .filter(col("shingle").isNotNull)
         .select("doc_id", "pos", "shingle")).cache())
@@ -154,11 +151,8 @@ object SpanPack extends QueryPack {
     * and re-scans `text` (verified in the plan audit). Caching the
     * narrow frame makes the heavy column a single-read at any scale.
     */
-  private val packDocsCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def packDocsCached(s: SparkSession, d: String): DataFrame =
-    packDocsCache.getOrElseUpdate((s, d),
+    graft.Memo.share("SpanPack.packDocs", s, d)(
       narrowDocs(Tables.documents(s, d)).cache())
 
   private def packLayout(docsNarrow: DataFrame, prefixLen: Int): DataFrame = {

@@ -57,11 +57,8 @@ object TextPack extends QueryPack {
     * `shingle IS NOT NULL` (position-sensitive ones — winnowing — MUST,
     * or their window frames would count the extra row).
     */
-  private val posShingleCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def posShinglesCached(s: SparkSession, d: String): DataFrame =
-    posShingleCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("TextPack.posShingles", s, d) {
       val w = Window.partitionBy("doc_id").orderBy("pos")
       graft.Tables.documents(s, d)
         .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
@@ -74,16 +71,13 @@ object TextPack extends QueryPack {
           when(col("t2").isNotNull,
             concat_ws(" ", col("tok"), col("t1"), col("t2"))).as("shingle"))
         .cache()
-    })
+    }
 
   /** Session-memoized cached shingle table — feeds the jaccard pipeline
     * and DedupPack's MinHash signatures/verification.
     */
-  private val shingleCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def shinglesCached(s: SparkSession, d: String): DataFrame =
-    shingleCache.getOrElseUpdate((s, d),
+    graft.Memo.share("TextPack.shingles", s, d)(
       graft.Memo.pin(posShinglesCached(s, d).filter(col("shingle").isNotNull)
         .select("doc_id", "shingle").distinct()))
 
@@ -93,11 +87,8 @@ object TextPack extends QueryPack {
     * cached shingle table per call (~6 s taskTime each warm at sf0.1);
     * one dimension-scale fill (one row per doc) serves them all.
     */
-  private val docShingleSizeCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def docShingleSizesCached(s: SparkSession, d: String): DataFrame =
-    docShingleSizeCache.getOrElseUpdate((s, d),
+    graft.Memo.share("TextPack.docShingleSizes", s, d)(
       graft.Memo.pin(shinglesCached(s, d).groupBy("doc_id")
         .agg(count(lit(1)).as("n_shingles"))))
 
@@ -108,11 +99,8 @@ object TextPack extends QueryPack {
     * that query: ~7 s taskTime warm at sf0.1) runs once per session; the
     * frame is dimension-scale (≤ one row per doc).
     */
-  private val novelCountCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   private def novelCountsCached(s: SparkSession, d: String): DataFrame =
-    novelCountCache.getOrElseUpdate((s, d),
+    graft.Memo.share("TextPack.novelCounts", s, d)(
       graft.Memo.pin(shinglesCached(s, d).groupBy("shingle").agg(min(col("doc_id")).as("first_doc"))
         .groupBy(col("first_doc").as("doc_id"))
         .agg(count(lit(1)).as("n_novel"))))
@@ -126,11 +114,8 @@ object TextPack extends QueryPack {
     * the positional stream drops each doc's last token (t1 null) and
     * single-token docs entirely, so tf must not derive from it.
     */
-  private val tokenCountCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def tokenCountsCached(s: SparkSession, d: String): DataFrame =
-    tokenCountCache.getOrElseUpdate((s, d),
+    graft.Memo.share("TextPack.tokenCounts", s, d)(
       graft.Memo.pin(graft.Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
           explode(split(col("text"), " ")).as("tok"))
@@ -142,11 +127,8 @@ object TextPack extends QueryPack {
     * reuse rationale as [[bigramLmCached]]: the table fills once per
     * session; scoring is then one broadcast join against the tf memo.
     */
-  private val idfCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def idfCached(s: SparkSession, d: String): DataFrame =
-    idfCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("TextPack.idf", s, d) {
       val nDocs = graft.Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
       graft.Memo.pin(tokenCountsCached(s, d)
         // df = DISTINCT DOCS containing the token. The memo rows are
@@ -156,7 +138,7 @@ object TextPack extends QueryPack {
         // too (two-phase partial-distinct aggregate, still vocab-scale)
         .groupBy("tok").agg(countDistinct(col("doc_id")).as("df"))
         .crossJoin(broadcast(nDocs)))
-    })
+    }
 
   /** Session-memoized frozen-tokenizer piece table — (tok, pieces) from
     * the staged merge passes over the corpus vocabulary. The tokenizer
@@ -164,11 +146,8 @@ object TextPack extends QueryPack {
     * over the vocab are a model artifact like [[idfCached]]: fill once,
     * broadcast to every encode.
     */
-  private val bpePiecesCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def bpePiecesCached(s: SparkSession, d: String): DataFrame =
-    bpePiecesCache.getOrElseUpdate((s, d),
+    graft.Memo.share("TextPack.bpePieces", s, d)(
       graft.Memo.pin(Bpe.piecesTable(
         tokenCountsCached(s, d).filter(length(col("tok")) >= 1)
           .select("tok").distinct())))
@@ -180,11 +159,8 @@ object TextPack extends QueryPack {
     * session; scoring is then one broadcast join against the memoized
     * positional stream.
     */
-  private val bigramLmCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
   def bigramLmCached(s: SparkSession, d: String): DataFrame =
-    bigramLmCache.getOrElseUpdate((s, d),
+    graft.Memo.share("TextPack.bigramLm", s, d)(
       graft.Memo.pin(posShinglesCached(s, d)
         .groupBy("tok", "t1").agg(count(lit(1)).as("c12"))
         .withColumn("c1", sum(col("c12")).over(Window.partitionBy("tok")))))
@@ -873,13 +849,10 @@ object TextPack extends QueryPack {
     * loop's cost land nondeterministically on later bench queries
     * (q_dedup_clusters itself measured 2.19–8.11 s across driver runs).
     */
-  private val clusterCache =
-    graft.Memo.map[(SparkSession, String), (DataFrame, () => Unit)] {
-      case (df, release) => graft.Memo.release(df); release()
-    }
-
   private def clustersCached(s: SparkSession, d: String): DataFrame =
-    clusterCache.getOrElseUpdate((s, d), {
+    graft.Memo.shareWith[(DataFrame, () => Unit)]("TextPack.clusters", s, d) {
+      case (df, release) => graft.Memo.release(df); release()
+    } {
       // near-dup canonicalization: connected components over the dup
       // pairs — see graft.operators.ConnectedComponents for the
       // propagation algorithm, its O(log diameter) convergence, and the
@@ -904,7 +877,7 @@ object TextPack extends QueryPack {
       result.count()
       labels.unpersist(blocking = false)
       (result, release)
-    })._1
+    }._1
 
   /** Session-memoized PREFIX-FILTERED verified near-dup pairs — the
     * shared candidate+verify table behind q_dedup_ngram_jaccard,
@@ -931,16 +904,13 @@ object TextPack extends QueryPack {
     * frame is identical to the all-pairs formulation — the df<=1000
     * stopword-shingle cap stays as a second, now non-load-bearing,
     * linearity guard.
-    */
-  private val verifiedPairsCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
-  /** (doc1, doc2, inter, sz1, sz2) for every pair whose
+    *
+    * Rows: (doc1, doc2, inter, sz1, sz2) for every pair whose
     * containment-over-min can reach 1/2 — threshold filters are applied
     * by the consumers.
     */
   private def verifiedPairs(s: SparkSession, d: String): DataFrame =
-    verifiedPairsCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("TextPack.verifiedPairs", s, d) {
       val shd = shinglesCached(s, d)
       // stopword-shingle cut: postings capped (no-op at this corpus,
       // linearity guard at scale)
@@ -1001,7 +971,7 @@ object TextPack extends QueryPack {
           size(array_intersect(col("s1"), col("s2"))).cast("long").as("inter"),
           col("sz1"), col("sz2"))
         .cache()
-    })
+    }
 
   private def jaccardPairs(s: SparkSession, d: String): DataFrame =
     verifiedPairs(s, d)

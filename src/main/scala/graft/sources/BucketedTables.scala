@@ -56,18 +56,17 @@ object BucketedTables {
                                       spark: SparkSession,
                                       tables: Seq[String], path: Option[String])
 
-  private val factCache =
-    graft.Memo.map[(SparkSession, String), FactLayout] { v =>
-      import scala.util.control.NonFatal
-      v.tables.foreach { t =>
-        try v.spark.sql(s"DROP TABLE IF EXISTS $t")
-        catch { case NonFatal(_) => () }
-      }
-      v.path.foreach { p =>
-        try deleteRecursively(new java.io.File(p))
-        catch { case NonFatal(_) => () }
-      }
+  private def dropLayout(v: FactLayout): Unit = {
+    import scala.util.control.NonFatal
+    v.tables.foreach { t =>
+      try v.spark.sql(s"DROP TABLE IF EXISTS $t")
+      catch { case NonFatal(_) => () }
     }
+    v.path.foreach { p =>
+      try deleteRecursively(new java.io.File(p))
+      catch { case NonFatal(_) => () }
+    }
+  }
 
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty)
@@ -76,7 +75,7 @@ object BucketedTables {
   }
 
   def factLayout(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val v = factCache.getOrElseUpdate((s, d), {
+    val v = graft.Memo.shareWith[FactLayout]("BucketedTables.factLayout", s, d)(dropLayout) {
       // NonFatal only: an OutOfMemoryError/LinkageError during the
       // layout write must propagate, not silently degrade the layout
       try {
@@ -98,7 +97,7 @@ object BucketedTables {
             s"(${e.getClass.getSimpleName}); falling back to plain parquet")
           FactLayout(Tables.lineitem(s, d), Tables.orders(s, d), s, Nil, None)
       }
-    })
+    }
     (v.lineitem, v.orders)
   }
 }

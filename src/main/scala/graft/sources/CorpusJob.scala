@@ -38,17 +38,14 @@ import org.apache.spark.sql.functions._
   */
 object CorpusJob extends QueryPack {
 
-  /** Session memo for the cleaned-survivor frame: [[mixedLayout]] (the
-    * composed job) and [[dedupSavings]] both consume it, and its build
-    * (exact-keeper aggregate ∩ the corpus-filter decision over the
-    * memoized jaccard pool) is the costliest stage of either.
+  /** Cleaned survivors: exact-dup keepers ∩ corpus-filter kept. A
+    * session memo: [[mixedLayout]] (the composed job) and [[dedupSavings]]
+    * both consume it, and its build (exact-keeper aggregate ∩ the
+    * corpus-filter decision over the memoized jaccard pool) is the
+    * costliest stage of either.
     */
-  private val cleanedCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
-
-  /** Cleaned survivors: exact-dup keepers ∩ corpus-filter kept. */
   def cleanedDocs(s: SparkSession, d: String): DataFrame =
-    cleanedCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("CorpusJob.cleanedDocs", s, d) {
       val docs = Tables.documents(s, d)
       val keepers = docs
         .groupBy(md5(col("text")).as("cmd5"))
@@ -57,21 +54,17 @@ object CorpusJob extends QueryPack {
       val kept = TextPack.queries("q_corpus_filter")(s, d)
         .filter(col("kept") === 1).select("doc_id")
       docs.join(keepers, "doc_id").join(kept, "doc_id").cache()
-    })
-
-  /** Session memo for the mixed pack layout: [[manifest]] (the graded
-    * query) and [[run]] (the physical shard write) both read it — one
-    * pack+mix pass per session instead of one per consumer.
-    */
-  private val mixedCache =
-    graft.Memo.map[(SparkSession, String), DataFrame](graft.Memo.release)
+    }
 
   /** Packed layout of the cleaned corpus with the temperature-mix token
     * budget applied as a start_off gate (a doc enters while its source's
-    * budget is not yet exhausted at its pack offset).
+    * budget is not yet exhausted at its pack offset). A session memo:
+    * [[manifest]] (the graded query) and [[run]] (the physical shard
+    * write) both read it — one pack+mix pass per session instead of one
+    * per consumer.
     */
   def mixedLayout(s: SparkSession, d: String): DataFrame =
-    mixedCache.getOrElseUpdate((s, d), {
+    graft.Memo.share("CorpusJob.mixedLayout", s, d) {
       val layout = SpanPack.packContextsFrom(cleanedDocs(s, d))
       val alloc = CorpusPack.queries("q_mix_temperature")(s, d)
         .select(col("source"), col("alloc_tokens"))
@@ -79,7 +72,7 @@ object CorpusJob extends QueryPack {
         .filter(col("start_off") < col("alloc_tokens"))
         .drop("alloc_tokens")
         .cache()
-    })
+    }
 
   /** Shard manifest of the mixed corpus — the loader-side contract the
     * physical write is validated against.

@@ -60,4 +60,18 @@ class CleanerSpec extends AnyFunSuite {
     assert(clean.filter(col("symbol") === "B").isEmpty)
     assert(clean.filter(col("symbol") === "A").count() == 4L)
   }
+
+  /** The public fills compute over the frame they are given: a caller
+    * that passes a fresh bars frame per batch must not pin every batch.
+    */
+  test("fillMissingMinutes caches nothing of the frames it is given") {
+    val ticks = Tables.ticks(spark, TestSpark.Sf)
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    (1 to 3).foreach { batch =>
+      val bars = graft.operators.Bars.ohlcv(ticks, 60).withColumn("close", col("close") + batch)
+      assert(Cleaner.fillMissingMinutes(bars).collect().nonEmpty)
+    }
+    val added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(added.isEmpty, s"fills left ${added.size} persistent RDD(s): $added")
+  }
 }

@@ -69,7 +69,7 @@ class MemoReleaseSpec extends AnyFunSuite {
       Memo.release(bare)
     } finally spark.conf.set(key, threshold)
 
-    Memo.map[String, org.apache.spark.sql.DataFrame](Memo.release).put("small", pinned)
+    assert(Memo.share("MemoReleaseSpec.small")(pinned) eq pinned)
     assert(spark.sparkContext.getPersistentRDDs.contains(id))
     Memo.invalidateAll()
     assert(!spark.sparkContext.getPersistentRDDs.contains(id))

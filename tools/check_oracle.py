@@ -16,9 +16,17 @@ disk-prohibitive, is distinguishable from the sf0.1-re-verified rest).
 Rows merge into an existing artifact: a query's oracle_sf is the MAX sf
 at which it has passed, and per-sf verdicts are kept under `by_sf`.
 """
-import json, sys, glob, os, re
+import json, sys, glob, os, re, shutil, tempfile
 import duckdb
 import pandas as pd
+
+def duckdb_config(spill_dir):
+    """Cap DuckDB at half the host's MemTotal and give it a spill dir:
+    uncapped, a heavy mirror grows until the host runs out of memory
+    instead of spilling its operators to disk."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    return {"memory_limit": f"{kb // 2048}MB", "temp_directory": spill_dir}
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
@@ -26,7 +34,14 @@ def main():
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = m.group(1).rstrip(".") if m else sf_dir
     results = {}
-    con = duckdb.connect()
+    spill_dir = tempfile.mkdtemp(prefix="check_oracle_")
+    try:
+        con = duckdb.connect(config=duckdb_config(spill_dir))
+        check(con, sf_dir, out_dir, only, sf, results)
+    finally:
+        shutil.rmtree(spill_dir, ignore_errors=True)
+
+def check(con, sf_dir, out_dir, only, sf, results):
     for p in glob.glob(f"{sf_dir}/*.parquet"):
         t = os.path.basename(p).replace(".parquet", "")
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
