@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
   /** THE parallelism default, shared by every entry point (GraftSession,
-    * Bench, Verify, MicroBench): `SPARK_GRAFT_CPUS` if set, else the
+    * Bench, Verify, the tools): `SPARK_GRAFT_CPUS` if set, else the
     * machine's cores. One constant — BENCH_r02's 217.5 s cold pass came
     * from Bench defaulting to a literal that disagreed with the pinned
     * local[32] methodology, and r06 still carried a hardcoded 32 here.

@@ -233,7 +233,7 @@ object BacktestPack extends QueryPack {
       // executed in 0.09 s but spent 1.5-3 s of DRIVER time per call:
       // ~130 aggregate expressions + 108 window sums + 9 corr columns
       // made every AQE stage re-optimization walk a huge plan (measured
-      // with MICRO_PLANexec: stages 0.8 s wall, re-exec of the same
+      // by plan/exec split: stages 0.8 s wall, re-exec of the same
       // frame 0.09 s, the rest Catalyst/AQE on the fat plan — and in
       // the bench neighborhood, that driver work is what inherited the
       // GC debt). So: MELT FIRST. stack() unpivots the 9 features to

@@ -18,28 +18,19 @@ import org.apache.spark.sql.functions._
 object PortfolioOpt {
   val RiskFree = 0.02
 
-  /** Session-memoized shared subplans, keyed by the bars DataFrame
-    * INSTANCE — sound because Bars.ohlcvCached returns one instance per
-    * (session, dataset, granularity), the same pattern as the memoized
-    * bars/shingles. Six queries (asset stats, frontier, max-sharpe,
-    * min-vol, risk parity ×2) otherwise each rebuild the returns scan,
-    * the N² covariance join, and — for the three frontier consumers —
-    * the whole grid-scoring pipeline.
-    */
-  private def retsCached(bars: DataFrame): DataFrame =
-    graft.Memo.share("PortfolioOpt.rets", bars)(Risk.barReturns(bars).cache())
-
-  private def covCached(bars: DataFrame): DataFrame =
-    graft.Memo.share("PortfolioOpt.cov", bars)(covFromRets(retsCached(bars)).cache())
-
   /** Pairwise annualized covariance/correlation matrix of per-symbol bar
     * returns, joined on time bucket (full N×N, both directions).
     * portfolio_optimization.py:22 (returns_df.cov() * 252).
+    *
+    * These public functions cache nothing of the frame they are given:
+    * the six registered queries share their returns, covariance and
+    * frontier through `PortfolioPack`'s (session, dataset) memos, which
+    * call the `*From` forms below.
     */
   def covMatrix(bars: DataFrame): DataFrame =
-    covCached(bars)
+    covFromRets(Risk.barReturns(bars))
 
-  private def covFromRets(rets: DataFrame): DataFrame = {
+  private[backtest] def covFromRets(rets: DataFrame): DataFrame = {
     val a = rets.select(col("symbol").as("symbol1"), col("bucket_ms"), col("r").as("r1"))
     val b = rets.select(col("symbol").as("symbol2"), col("bucket_ms"), col("r").as("r2"))
     a.join(b, "bucket_ms")
@@ -94,7 +85,13 @@ object PortfolioOpt {
   }
 
   def frontier(spark: SparkSession, bars: DataFrame, quarters: Int = 4): DataFrame =
-    frontierWithGrid(spark, bars, quarters)._2
+    frontierFrom(spark, barsInputs(bars), quarters)._2
+
+  /** A frame's bar returns and their covariance, uncached. */
+  private def barsInputs(bars: DataFrame): (DataFrame, DataFrame) = {
+    val rets = Risk.barReturns(bars)
+    (rets, covFromRets(rets))
+  }
 
   /** Argmax/argmin composition over the frontier grid — the number the
     * reference's users consume (portfolio_optimization.py:87
@@ -102,8 +99,12 @@ object PortfolioOpt {
     * winning weight vector in long form with its metrics.
     */
   def selectPortfolio(spark: SparkSession, bars: DataFrame, objective: String,
-                      quarters: Int = 4): DataFrame = {
-    val (grid, f) = frontierWithGrid(spark, bars, quarters)
+                      quarters: Int = 4): DataFrame =
+    selectFrom(frontierFrom(spark, barsInputs(bars), quarters), objective)
+
+  private[backtest] def selectFrom(gridAndFrontier: (DataFrame, DataFrame),
+                                   objective: String): DataFrame = {
+    val (grid, f) = gridAndFrontier
     val best = (objective match {
       case "max_sharpe" => f.orderBy(col("sharpe").desc, col("grid_id"))
       case "min_vol"    => f.orderBy(col("port_vol"), col("grid_id"))
@@ -115,17 +116,10 @@ object PortfolioOpt {
       .orderBy("symbol")
   }
 
-  private def frontierWithGrid(spark: SparkSession, bars: DataFrame,
-                               quarters: Int): (DataFrame, DataFrame) =
-    graft.Memo.shareWith[(DataFrame, DataFrame)]("PortfolioOpt.frontier", spark, bars, quarters)(
-      graft.Memo.releasePair)(buildFrontier(spark, bars, quarters))
-
-  private def buildFrontier(spark: SparkSession, bars: DataFrame,
-                            quarters: Int): (DataFrame, DataFrame) = {
-    // cache barrier: the bar-returns scan feeds cov, mu AND the symbol
-    // collect — one tick->bars pass instead of three
-    val rets = retsCached(bars)
-    val cov = covCached(bars)
+  /** The weight grid and its scored frontier over (returns, covariance). */
+  private[backtest] def frontierFrom(spark: SparkSession, retsAndCov: (DataFrame, DataFrame),
+                                     quarters: Int): (DataFrame, DataFrame) = {
+    val (rets, cov) = retsAndCov
     val mu = muFromRets(rets)
     val symbols = symbolUniverse(mu)
     val grid = weightGrid(spark, symbols, quarters)
@@ -148,9 +142,7 @@ object PortfolioOpt {
         Port.r(col("port_vol_raw"), 6).as("port_vol"),
         Port.r(when(col("port_vol_raw") > 0,
           (col("port_ret_raw") - RiskFree) / col("port_vol_raw")).otherwise(0.0), 6).as("sharpe"))
-    // the scored frontier is tiny (one row per composition); cache it so
-    // max-sharpe / min-vol / frontier share one scoring pass
-    (grid, f.cache())
+    (grid, f)
   }
 
   /** Risk-parity weight search (portfolio_optimization.py:282
@@ -161,37 +153,37 @@ object PortfolioOpt {
     * objective (ties → lowest grid_id). Returns the winning composition
     * in long form with its contributions.
     */
-  /** Session-memoized risk-contribution grid (feeds both the argmin and
-    * the final join below; memoized rather than bare-per-call-cached so
-    * Memo.invalidateAll owns eviction).
-    */
-  private def rcGridCached(spark: SparkSession, bars: DataFrame,
-                           quarters: Int): DataFrame =
-    graft.Memo.share("PortfolioOpt.rcGrid", bars, quarters) {
-      val rets = retsCached(bars)
-      val cov = covCached(bars)
-      val symbols = symbolUniverse(muFromRets(rets))
-      val grid = weightGrid(spark, symbols, quarters)
-      val g2 = grid.select(col("grid_id"), col("symbol").as("symbol2"), col("weight").as("w2"))
-      val marginal = g2.join(broadcast(cov), "symbol2")
-        .groupBy(col("grid_id"), col("symbol1"))
-        .agg(sum(col("w2") * col("cov_ann_raw")).as("marg"))
-      val withW = marginal.join(
-        grid.select(col("grid_id"), col("symbol").as("symbol1"), col("weight")),
-        Seq("grid_id", "symbol1"))
-      // σ_p as a whole-grid-row window sum, not groupBy + join-back: the
-      // join form planned withW's three-shuffle lineage twice
-      withW
-        .withColumn("pv", sqrt(sum(col("weight") * col("marg"))
-          .over(Window.partitionBy("grid_id"))))
-        .withColumn("rc", col("weight") * col("marg") / col("pv"))
-        .cache()
-    }
-
   def riskParityOptimize(spark: SparkSession, bars: DataFrame,
                          quarters: Int = 4): DataFrame = {
-    val symbols = symbolUniverse(muFromRets(retsCached(bars)))
-    val rc = rcGridCached(spark, bars, quarters)
+    val inputs = barsInputs(bars)
+    riskParityFrom(inputs._1, rcGridFrom(spark, inputs, quarters))
+  }
+
+  /** Risk contributions rc of every grid composition over (returns,
+    * covariance): one row per (grid_id, symbol1) with its weight.
+    */
+  private[backtest] def rcGridFrom(spark: SparkSession, retsAndCov: (DataFrame, DataFrame),
+                                   quarters: Int): DataFrame = {
+    val (rets, cov) = retsAndCov
+    val symbols = symbolUniverse(muFromRets(rets))
+    val grid = weightGrid(spark, symbols, quarters)
+    val g2 = grid.select(col("grid_id"), col("symbol").as("symbol2"), col("weight").as("w2"))
+    val marginal = g2.join(broadcast(cov), "symbol2")
+      .groupBy(col("grid_id"), col("symbol1"))
+      .agg(sum(col("w2") * col("cov_ann_raw")).as("marg"))
+    val withW = marginal.join(
+      grid.select(col("grid_id"), col("symbol").as("symbol1"), col("weight")),
+      Seq("grid_id", "symbol1"))
+    // σ_p as a whole-grid-row window sum, not groupBy + join-back: the
+    // join form planned withW's three-shuffle lineage twice
+    withW
+      .withColumn("pv", sqrt(sum(col("weight") * col("marg"))
+        .over(Window.partitionBy("grid_id"))))
+      .withColumn("rc", col("weight") * col("marg") / col("pv"))
+  }
+
+  private[backtest] def riskParityFrom(rets: DataFrame, rc: DataFrame): DataFrame = {
+    val symbols = symbolUniverse(muFromRets(rets))
     val target = 1.0 / symbols.length
     val best = rc.groupBy("grid_id")
       .agg(Port.r(sum((col("rc") - target) * (col("rc") - target)), 2).as("objective"))
@@ -205,8 +197,10 @@ object PortfolioOpt {
   /** Risk contribution per asset at fixed equal weights
     * (portfolio_optimization.py:245 calculate_risk_contributions).
     */
-  def riskContributions(bars: DataFrame, weight: Double = 0.2): DataFrame = {
-    val cov = covMatrix(bars)
+  def riskContributions(bars: DataFrame, weight: Double = 0.2): DataFrame =
+    riskContribFrom(covMatrix(bars), weight)
+
+  private[backtest] def riskContribFrom(cov: DataFrame, weight: Double): DataFrame = {
     val marginal = cov.groupBy("symbol1")
       .agg(sum(col("cov_ann_raw") * weight).as("marginal_raw"))
     val portVol = marginal

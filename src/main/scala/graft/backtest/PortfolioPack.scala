@@ -1,6 +1,6 @@
 package graft.backtest
 
-import graft.{QueryPack, Tables}
+import graft.{Memo, QueryPack, Tables}
 import graft.functions.Port
 import graft.operators.Bars
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,24 +14,46 @@ object PortfolioPack extends QueryPack {
   private def barsH(s: SparkSession, d: String): DataFrame =
     Bars.ohlcvCached(s, d, 3600)
 
+  /** Session memos over the hourly bars, keyed by (session, dataset).
+    * The six queries share one returns scan (it feeds the covariance, the
+    * mean returns and the symbol collect), one N² covariance join, one
+    * scored frontier (frontier, max-sharpe, min-vol; one row per weight
+    * composition) and one risk-contribution grid (the risk-parity
+    * argmin and its join back).
+    */
+  private def rets(s: SparkSession, d: String): DataFrame =
+    Memo.share("PortfolioPack.rets", s, d)(Risk.barReturns(barsH(s, d)).cache())
+
+  private def retsAndCov(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    (rets(s, d), Memo.share("PortfolioPack.cov", s, d)(PortfolioOpt.covFromRets(rets(s, d)).cache()))
+
+  private def frontier(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    Memo.shareWith[(DataFrame, DataFrame)]("PortfolioPack.frontier", s, d)(Memo.releasePair) {
+      val (grid, f) = PortfolioOpt.frontierFrom(s, retsAndCov(s, d), 4)
+      (grid, f.cache())
+    }
+
+  private def rcGrid(s: SparkSession, d: String): DataFrame =
+    Memo.share("PortfolioPack.rcGrid", s, d)(PortfolioOpt.rcGridFrom(s, retsAndCov(s, d), 4).cache())
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_asset_stats" -> ((s, d) =>
-      PortfolioOpt.covMatrix(barsH(s, d))
+      retsAndCov(s, d)._2
         .select(col("symbol1"), col("symbol2"),
           Port.r(col("cov_ann_raw"), 4).as("cov_ann"),
           Port.r(col("corr_raw"), 6).as("corr"),
           col("n"))
         .orderBy("symbol1", "symbol2")),
     "q_efficient_frontier" -> ((s, d) =>
-      PortfolioOpt.frontier(s, barsH(s, d)).orderBy("grid_id")),
+      frontier(s, d)._2.orderBy("grid_id")),
     "q_max_sharpe" -> ((s, d) =>
-      PortfolioOpt.selectPortfolio(s, barsH(s, d), "max_sharpe")),
+      PortfolioOpt.selectFrom(frontier(s, d), "max_sharpe")),
     "q_min_vol" -> ((s, d) =>
-      PortfolioOpt.selectPortfolio(s, barsH(s, d), "min_vol")),
+      PortfolioOpt.selectFrom(frontier(s, d), "min_vol")),
     "q_risk_parity" -> ((s, d) =>
-      PortfolioOpt.riskContributions(barsH(s, d)).orderBy("symbol")),
+      PortfolioOpt.riskContribFrom(retsAndCov(s, d)._2, 0.2).orderBy("symbol")),
     "q_risk_parity_opt" -> ((s, d) =>
-      PortfolioOpt.riskParityOptimize(s, barsH(s, d)))
+      PortfolioOpt.riskParityFrom(rets(s, d), rcGrid(s, d)))
   )
 
   private val RetsHCte: String =

@@ -44,11 +44,11 @@ object Signals {
 
   // ---- adaptive routing: the default entry points pick the flat or the
   // two-level (chunked) form from the per-symbol history depth, so every
-  // caller is scale-safe by default. Measured crossover (MICRO_CHUNK
-  // hot-symbol probe, local[32]): parity at 5M rows/symbol, chunked 2.5×
-  // faster at 30M — the flat form serializes a symbol's whole history
-  // through one task's sort, the chunked form spreads (symbol, chunk)
-  // tasks. Below the threshold the chunked form's extra stage constants
+  // caller is scale-safe by default. Measured crossover (one hot symbol,
+  // local[32]; SURVEY.md §8): parity at 5M rows/symbol, chunked 5.96 s
+  // vs flat 26.5 s warm at 30M — the flat form serializes a symbol's
+  // whole history through one task's sort, the chunked form spreads
+  // (symbol, chunk) tasks. Below the threshold the chunked form's extra stage constants
   // (~1.4 s at sf0.1) lose.
 
   /** Rows-per-symbol above which the chunked two-level forms win. */
@@ -59,7 +59,7 @@ object Signals {
     * counters), else plan statistics when the plan carries row count AND
     * symbol NDV (CBO/ANALYZE), else false — an unknown depth errs toward
     * the flat form, whose failure mode is a slow sort, not a wrong
-    * result, and the MICRO_CHUNK probe documents the crossover for
+    * result, and the crossover measured above (SURVEY.md §8) guides
     * pinning hints.
     */
   def useChunked(bars: DataFrame, rowsPerSymbolHint: Option[Long] = None): Boolean =

@@ -489,8 +489,8 @@ object Ann {
     * projection uses a Scala-lambda zip_with, and every lambda build
     * mints fresh lambda-variable ids — so a per-call resid rebuild never
     * canonicalized-equals the previous one and pqCodebooksCached missed
-    * on EVERY call (measured with tools/CanonProbe: 'x_9 vs 'x_11 in the
-    * otherwise-identical plans). The .cache() era masked the miss via
+    * on EVERY call ('x_9 vs 'x_11 in the otherwise-identical plans;
+    * OPTIMIZATION_r16.md). The .cache() era masked the miss via
     * CacheManager sameResult dedup (analysis normalizes the lambdas);
     * the r16 checkpoint materialization has no such net, so the
     * miss became a full per-call PQ re-train. Memoizing the DataFrame

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * - pointer jumping (root := root's root) halves label-chain depth per
   *   round, so convergence is O(log diameter), not O(diameter) — pinned
   *   by ConnectedComponentsSpec on a worst-case path graph and
-  *   measurable at scale via MICRO_CC;
+  *   measured at scale in SURVEY.md;
   * - per-round lazy localCheckpoint truncates lineage to a materialized
   *   leaf (flat memory and plan depth across rounds); superseded rounds'
   *   blocks unpersist deterministically, and [[labels]] frees the loop

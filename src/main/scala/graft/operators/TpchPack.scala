@@ -32,8 +32,8 @@ object TpchPack extends QueryPack {
   private val CutTs = lit("1998-06-01 00:00:00").cast("timestamp_ntz")
 
   /** Q3 over caller-supplied raw tables — the registered query passes
-    * the parquet feeds; tools/MicroBench passes bucketed-table reads to
-    * measure the Exchange-free co-located join (r13 verdict task 9).
+    * the parquet feeds or the bucketed fact layout, whose co-located join
+    * runs without an Exchange (BASELINE.md, round-14 bucketed layout).
     */
   def q3From(l0: DataFrame, o0: DataFrame, c0: DataFrame): DataFrame = {
     val c = c0.filter(col("c_mktsegment") === "BUILDING").select("c_custkey")

@@ -1,82 +1,60 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import graft.{GraftSession, SparkEntry, obs}
+import org.apache.spark.sql.functions.col
 
-/** Decomposes a registered query's WARM per-call cost into driver phases
-  * (guide §1/§7.3): DataFrame construction (pack code + table reads +
-  * analysis), executedPlan (optimization + physical planning), and
-  * execution (jobs: AQE stage materializations + the final toRdd count),
-  * with the Spark jobs each call submits and each stage's task count.
-  * The residual between execution wall and stage/task time is AQE
-  * re-planning + scheduling — the per-query constant VERDICT r16 item 3
-  * targets.
+/** The per-query probe: calls registered queries and prints one record
+  * per call from `graft.obs` — the driver phases (construct: pack code,
+  * table reads and analysis; plan: optimization and physical planning;
+  * exec: every job of the plan), the jobs, tasks, task p50/p95, shuffle,
+  * spill and output bytes of exec, and one line per stage with its wall,
+  * tasks and task p95. The residual between
+  * exec wall and stage wall is AQE re-planning and scheduling, the
+  * per-query constant of a warm call.
+  *
+  * Each query's first call (memo fill, codegen) prints as `call=first`;
+  * a second, silent call finishes warming and `reps` warm calls follow.
+  * The name `jobconst` instead times bare jobs of 1-32 tasks and one tiny
+  * AQE shuffle job: the per-job scheduling constant.
   *
   * `runMain graft.tools.GapProbe <sfDir> <query>[,query...] [reps]`
   */
 object GapProbe {
+  private def report(name: String, call: String, c: obs.Call): Unit = {
+    val e = c.exec
+    println(f"GAP $name call=$call construct=${c.constructMs}%7.1f ms plan=${c.planMs}%7.1f ms " +
+      f"exec=${e.wallMs}%7.1f ms jobs=${e.jobs}%3d tasks=${e.tasks}%4d " +
+      f"task_p50/p95=${e.taskP50Ms}/${e.taskP95Ms} ms shuffle_r/w=${e.shuffleReadBytes / 1e3}%.1f/" +
+      f"${e.shuffleWriteBytes / 1e3}%.1f kB spill=${e.spillBytes / 1e3}%.1f kB out=${e.outputBytes / 1e3}%.1f kB")
+    e.stages.foreach { s =>
+      println(f"  stage ${s.id}%4d wall=${s.wallMs}%5d ms tasks=${s.tasks}%3d " +
+        f"p95=${s.p95Ms}%5d ms  ${s.name.take(90)}")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = args.lift(1).map(_.split(",").toSeq)
-      .getOrElse(Seq("q_stochastic"))
+    require(args.length >= 2, "usage: GapProbe <sfDir> <query>[,query...] [reps]")
+    val d = args(0)
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
     val spark = GraftSession.get("graft-gapprobe")
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        stageTasks.add(sc.stageInfo.numTasks)
-    }
-    spark.sparkContext.addSparkListener(l)
-    for (name <- names if name == "jobconst") {
-      for (n <- Seq(1, 4, 16, 32); r <- 1 to reps) {
-        val t0 = System.nanoTime()
-        spark.sparkContext.parallelize(1 to n, n).count()
-        println(f"JOB tasks=$n%3d rep=$r ${(System.nanoTime() - t0) / 1e6}%7.1f ms")
-      }
-      // one shuffle job: groupBy over a tiny range (AQE path)
-      for (r <- 1 to reps) {
-        val t0 = System.nanoTime()
-        spark.range(1000).groupBy(org.apache.spark.sql.functions.col("id") % 7)
-          .count().queryExecution.toRdd.count()
-        println(f"SHUF rep=$r ${(System.nanoTime() - t0) / 1e6}%7.1f ms")
-      }
-    }
-    for (name <- names if name.startsWith("table:")) {
-      val t = name.stripPrefix("table:")
-      for (r <- 1 to reps) {
-        val t0 = System.nanoTime()
-        val df = spark.read.parquet(s"$d/$t.parquet")
-        val t1 = System.nanoTime()
-        df.queryExecution.analyzed
-        val t2 = System.nanoTime()
-        println(f"READ $t rep=$r read=${(t1 - t0) / 1e6}%7.1f ms " +
-          f"analyze=${(t2 - t1) / 1e6}%7.1f ms")
-      }
-    }
-    for (name <- names if !name.startsWith("table:")) {
-      val fn = SparkEntry.queries(name)
-      fn(spark, d).queryExecution.toRdd.count() // memo fill + codegen
-      fn(spark, d).queryExecution.toRdd.count()
-      for (r <- 1 to reps) {
-        val t0 = System.nanoTime()
-        val df = fn(spark, d)
-        val t1 = System.nanoTime()
-        val qe = df.queryExecution
-        qe.executedPlan // forces analysis+optimization+physical planning
-        val t2 = System.nanoTime()
-        jobs.set(0)
-        stageTasks.clear()
-        qe.toRdd.count()
-        val t3 = System.nanoTime()
-        Thread.sleep(200)
-        val tasks = stageTasks.toArray.mkString(",")
-        println(f"GAP $name rep=$r construct=${(t1 - t0) / 1e6}%7.1f ms " +
-          f"plan=${(t2 - t1) / 1e6}%7.1f ms exec=${(t3 - t2) / 1e6}%7.1f ms " +
-          f"jobs=${jobs.get()}%3d total=${(t3 - t0) / 1e6}%7.1f ms tasks=$tasks")
+    for (name <- args(1).split(",").toSeq) {
+      if (name == "jobconst") {
+        for (n <- Seq(1, 4, 16, 32); r <- 1 to reps) {
+          val s = obs.span(name)(spark.sparkContext.parallelize(1 to n, n).count())._2
+          println(f"JOB tasks=$n%3d rep=$r ${s.wallMs}%7.1f ms")
+        }
+        for (r <- 1 to reps) {
+          val s = obs.span(name)(
+            spark.range(1000).groupBy(col("id") % 7).count().queryExecution.toRdd.count())._2
+          println(f"SHUF rep=$r ${s.wallMs}%7.1f ms jobs=${s.jobs} tasks=${s.tasks}")
+        }
+      } else {
+        val fn = SparkEntry.queries(name)
+        def call(): obs.Call = obs.call(name)(fn(spark, d))
+        report(name, "first", call())
+        call()
+        for (r <- 1 to reps) report(name, s"warm$r", call())
       }
     }
     spark.stop()

@@ -1,158 +1,81 @@
 package graft.tools
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.nio.file.Files
 
-import graft.GraftSession
+import scala.collection.mutable
+
+import graft.{GraftSession, obs}
 import graft.sources.{CorpusJob, MarketJob}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.commons.io.FileUtils
 
-/** Composed-job scale rehearsal (VERDICT r13 task 4): run the two
-  * production jobs — CorpusJob (read → clean → pack → mix → shard
-  * manifest) and MarketJob (validate → clean → resample → backtest →
-  * report) — at 10x and 30x replicas of sf0.1 (tools/gen_scale.py,
-  * decorrelated copies), recording per-stage wall seconds, task-duration
-  * p50/p95/max, and shuffle bytes (total + peak per task), plus the
-  * physical ShardWriter write at 10x.
+/** Composed-job scale rehearsal: runs the two production jobs, CorpusJob
+  * (read → clean → pack → mix → shard manifest) and MarketJob (validate →
+  * clean → resample → backtest → report), over each labelled dataset dir
+  * in turn, each stage as a `graft.obs` span. The last label also writes
+  * its shards (the full `CorpusJob.run`, into a temporary directory that
+  * is removed after). Prints one JSON line: per stage its rows, wall
+  * seconds, tasks, shuffle MB and peak task shuffle read, plus the
+  * heaviest stage by task time and the most skewed wide stage.
   *
-  * Stage boundaries are CUMULATIVE (each stage action re-rides the memo
-  * graph the previous stage warmed — exactly how the composed job runs),
-  * so the per-stage numbers isolate the marginal cost of each new layer.
+  * Stage boundaries are cumulative: each stage re-rides the memos the
+  * previous one filled, as the composed job does, so a stage's numbers
+  * are the marginal cost of its layer. Pass criteria (BASELINE.md carries
+  * the measured rows): wall time sublinear in scale per job, and max/p95
+  * task duration <= ~1.5 within every wide stage.
   *
-  * Pass criteria (BASELINE.md carries the measured rows): wall time
-  * sublinear 10x→30x (ratio <= ~3) per job, and max/p95 task duration
-  * <= ~1.5 on every stage (no straggler owns a hot key).
-  *
-  * `runMain graft.tools.JobRehearsal [dir10] [dir30]` — one JSON line;
-  * SPARK_GRAFT_JOB_FILE overrides the output path.
+  * `runMain graft.tools.JobRehearsal <label>=<sfDir> [<label>=<sfDir> ...]`
+  * (`tools/gen_scale.py` writes replica dirs).
   */
 object JobRehearsal {
+  private def maxOverP95(s: obs.Stage): Double =
+    if (s.p95Ms > 0) s.maxMs.toDouble / s.p95Ms else 0.0
 
-  /** Per-STAGE task-duration stats: a composed job runs dozens of
-    * stages of very different task-size classes, and a pooled max/p95
-    * over all of them reads as a straggler whenever a legitimately
-    * heavy stage coexists with probe-sized ones. The skew criterion is
-    * judged within each stage (the r13 SkewRehearsal's unit), on stages
-    * wide enough for a p95 to mean anything (>= 16 tasks).
-    */
-  private final class TaskStats extends SparkListener {
-    val byStage = new java.util.concurrent.ConcurrentHashMap[Int, ConcurrentLinkedQueue[Long]]()
-    val shufRead = new ConcurrentLinkedQueue[Long]()
-    val shufWrite = new ConcurrentLinkedQueue[Long]()
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-      if (te.taskInfo != null) {
-        byStage.computeIfAbsent(te.stageId, _ => new ConcurrentLinkedQueue[Long]())
-          .add(te.taskInfo.duration)
-        if (te.taskMetrics != null) {
-          shufRead.add(te.taskMetrics.shuffleReadMetrics.totalBytesRead)
-          shufWrite.add(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        }
-      }
+  private def stageJson(s: Option[obs.Stage]): String = s.fold("null") { s =>
+    f"""{"stage":${s.id},"tasks":${s.tasks},"p50_ms":${s.p50Ms},"p95_ms":${s.p95Ms},""" +
+      f""""max_ms":${s.maxMs},"max_over_p95":${maxOverP95(s)}%.2f}"""
   }
 
-  private def pct(sorted: Array[Long], p: Double): Long =
-    if (sorted.isEmpty) 0L
-    else sorted(math.min(sorted.length - 1, (p * sorted.length).toInt))
-
   def main(args: Array[String]): Unit = {
-    val dir10 = args.headOption.getOrElse("/tmp/sfscale10")
-    val dir30 = args.lift(1).getOrElse("/tmp/sfscale30")
+    val dirs = args.toSeq.map { a =>
+      val Array(label, dir) = a.split("=", 2)
+      label -> dir
+    }
+    require(dirs.nonEmpty, "usage: JobRehearsal <label>=<sfDir> [<label>=<sfDir> ...]")
     val spark = GraftSession.get("graft-jobrehearsal")
-    // straggler-visible reduce width, as in SkewRehearsal
+    // a reduce width at which a straggler task shows
     spark.conf.set("spark.sql.shuffle.partitions", "256")
+    val out = mutable.LinkedHashMap.empty[String, String]
 
-    val out = scala.collection.mutable.LinkedHashMap[String, String]()
-
-    def stage(scale: String, name: String)(action: => Long): Unit = {
-      val st = new TaskStats
-      spark.sparkContext.addSparkListener(st)
-      val t0 = System.nanoTime()
-      val rows = action
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(st)
-      import scala.jdk.CollectionConverters._
-      val stages = st.byStage.asScala.toSeq.map { case (sid, q) =>
-        (sid, q.toArray(Array.empty[java.lang.Long]).map(_.longValue).sorted)
-      }
-      val nTasks = stages.map(_._2.length).sum
-      // skew criterion per WIDE stage (>= 16 tasks); narrow stages have
-      // no meaningful p95, and sub-second-p95 stages are excluded too —
-      // a 136 ms max on a 9 ms p95 reads as 15x "skew" but is scheduler
-      // noise, not a straggler (r16: gen100x stage 141)
-      val wide = stages.filter(s => s._2.length >= 16 && pct(s._2, 0.95) >= 1000)
-      val worst = wide.map { case (sid, ds) =>
-        (sid, ds, if (pct(ds, 0.95) > 0) ds.last.toDouble / pct(ds, 0.95) else 0.0)
-      }.sortBy(-_._3).headOption
-      // the heaviest stage by total task time, with its own distribution
-      val heavy = stages.sortBy(-_._2.sum).headOption
-      def stStr(s: Option[(Int, Array[Long])]): String = s match {
-        case Some((sid, ds)) =>
-          f"""{"stage":$sid,"tasks":${ds.length},"p50_ms":${pct(ds, 0.50)},""" +
-            f""""p95_ms":${pct(ds, 0.95)},"max_ms":${ds.last},""" +
-            f""""max_over_p95":${if (pct(ds, 0.95) > 0) ds.last.toDouble / pct(ds, 0.95) else 0.0}%.2f}"""
-        case None => "null"
-      }
-      val sr = st.shufRead.toArray(Array.empty[java.lang.Long]).map(_.longValue)
-      val sw = st.shufWrite.toArray(Array.empty[java.lang.Long]).map(_.longValue)
-      val key = s"${scale}_$name"
-      out(key) = f"""{"rows":$rows,"sec":$sec%.2f,"n_tasks":$nTasks,""" +
-        f""""worst_wide_stage":${stStr(worst.map(w => (w._1, w._2)))},""" +
-        f""""heaviest_stage":${stStr(heavy)},""" +
-        f""""shuffle_read_mb":${sr.sum / 1e6}%.1f,"shuffle_write_mb":${sw.sum / 1e6}%.1f,""" +
-        f""""peak_task_shuffle_read_mb":${(if (sr.isEmpty) 0L else sr.max) / 1e6}%.1f}"""
+    def stage(label: String, name: String)(action: => Long): Unit = {
+      val key = s"${label}_$name"
+      val (rows, s) = obs.span(key)(action)
+      // skew is judged within each wide stage (>= 16 tasks) with a p95 of
+      // a second or more: a narrow stage has no meaningful p95, and a
+      // 136 ms max on a 9 ms p95 is scheduler noise, not a straggler
+      val worst = s.stages.filter(st => st.tasks >= 16 && st.p95Ms >= 1000).maxByOption(maxOverP95)
+      out(key) = f"""{"rows":$rows,"sec":${s.wallMs / 1e3}%.2f,"n_tasks":${s.tasks},""" +
+        s""""worst_wide_stage":${stageJson(worst)},""" +
+        s""""heaviest_stage":${stageJson(s.stages.maxByOption(_.taskMs.sum))},""" +
+        f""""shuffle_read_mb":${s.shuffleReadBytes / 1e6}%.1f,"shuffle_write_mb":${s.shuffleWriteBytes / 1e6}%.1f,""" +
+        f""""peak_task_shuffle_read_mb":${s.peakTaskShuffleReadBytes / 1e6}%.1f}"""
       System.err.println(s"[jobrehearsal] $key -> ${out(key)}")
     }
 
-    def corpusJob(scale: String, d: String): Unit = {
-      stage(scale, "corpus_clean") { CorpusJob.cleanedDocs(spark, d).count() }
-      stage(scale, "corpus_pack_mix") { CorpusJob.mixedLayout(spark, d).count() }
-      stage(scale, "corpus_manifest") { CorpusJob.manifest(spark, d).collect().length.toLong }
+    for ((label, d) <- dirs) {
+      stage(label, "corpus_clean")(CorpusJob.cleanedDocs(spark, d).count())
+      stage(label, "corpus_pack_mix")(CorpusJob.mixedLayout(spark, d).count())
+      stage(label, "corpus_manifest")(CorpusJob.manifest(spark, d).collect().length.toLong)
+      stage(label, "market_summary")(MarketJob.summary(spark, d).collect().length.toLong)
     }
+    val (label, d) = dirs.last
+    val shards = Files.createTempDirectory("graft_shards_").toFile
+    try stage(label, "corpus_shard_write")(CorpusJob.run(spark, d, shards.getPath).count())
+    finally FileUtils.deleteDirectory(shards)
 
-    def marketJob(scale: String, d: String): Unit =
-      stage(scale, "market_summary") { MarketJob.summary(spark, d).collect().length.toLong }
-
-    // JOB_SPEC="label=dir,label=dir" runs arbitrary labeled scales (the
-    // r16 generated-SF path: 10x=/tmp/gen_sf1,100x=/tmp/gen_sf10);
-    // without it, the r14 replica-dir behavior is unchanged.
-    sys.env.get("JOB_SPEC") match {
-      case Some(spec) =>
-        val shardWriteLabel = sys.env.get("JOB_SHARD_WRITE_LABEL")
-        spec.split(",").map(_.trim).filter(_.nonEmpty).foreach { p =>
-          val Array(label, dir) = p.split("=", 2)
-          corpusJob(label, dir)
-          marketJob(label, dir)
-          if (shardWriteLabel.contains(label))
-            stage(label, "corpus_shard_write") {
-              CorpusJob.run(spark, dir, s"/tmp/graft_shards_$label").count()
-            }
-        }
-      case None =>
-        val scales = sys.env.getOrElse("JOB_SCALES", "10x,30x").split(",").toSet
-        if (scales("10x")) {
-          corpusJob("10x", dir10)
-          marketJob("10x", dir10)
-          // physical shard write at 10x: the full run() (write + manifest)
-          stage("10x", "corpus_shard_write") {
-            CorpusJob.run(spark, dir10, "/tmp/graft_r14_shards").count()
-          }
-        }
-        if (scales("30x")) {
-          corpusJob("30x", dir30)
-          marketJob("30x", dir30)
-        }
-    }
-
-    val line = out.map { case (k, v) => s""""$k":$v""" }
-      .mkString(s"""{"metric":"job_rehearsal","dir10":"$dir10","dir30":"$dir30","stages":{""", ",", "}}")
-    println(line)
-    val name = sys.env.getOrElse("SPARK_GRAFT_JOB_FILE", "job_rehearsal.json")
-    val f = if (new java.io.File(name).isAbsolute) new java.io.File(name)
-      else new java.io.File(sys.env.getOrElse("SPARK_GRAFT_OUT_DIR", "."), name)
-    try {
-      val pw = new java.io.PrintWriter(f)
-      try pw.println(line) finally pw.close()
-    } catch { case e: Throwable => System.err.println(s"job rehearsal write failed: $e") }
+    def obj(kv: Iterable[(String, String)]): String =
+      kv.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val dirJson = obj(dirs.map { case (l, dir) => l -> s""""$dir"""" })
+    println(s"""{"metric":"job_rehearsal","dirs":$dirJson,"stages":${obj(out)}}""")
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
+import org.apache.spark.sql.graft.Bridge
 
 /** Memo storage-pressure audit (VERDICT r16 item 4): fills the session
   * memo graph by running the memo-heavy query families once, then dumps
@@ -35,6 +36,9 @@ object MemoFootprint {
       try SparkEntry.queries(n)(spark, d).queryExecution.toRdd.count()
       catch { case e: Throwable =>
         System.err.println(s"[memofootprint] $n failed: ${e.getMessage}") }
+    // the status store behind getRDDStorageInfo lags the block manager
+    // until the listener bus has delivered every block update
+    Bridge.drainListenerBus(spark.sparkContext)
     val infos = spark.sparkContext.getRDDStorageInfo
       .filter(i => i.memSize + i.diskSize > 0).sortBy(-_.memSize)
     var totMem = 0L; var totDisk = 0L

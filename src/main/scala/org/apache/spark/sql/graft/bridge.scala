@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.SparkEnv
+import org.apache.spark.{SparkContext, SparkEnv}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -13,12 +13,18 @@ import org.apache.spark.storage.RDDBlockId
 /** Bridge into the `private[sql]` Column↔Expression converters — the
   * supported escape hatch for libraries that define native Catalyst
   * expressions against the classic SQL API (Spark 4 wraps Columns around
-  * ColumnNodes, not Expressions) — and into `Dataset.ofRows` and the
-  * block manager's record of a checkpoint's blocks.
+  * ColumnNodes, not Expressions) — into `Dataset.ofRows`, the block
+  * manager's record of a checkpoint's blocks, and the listener bus.
   */
 object Bridge {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Blocks until every event posted to `sc`'s listener bus so far has
+    * been delivered: listeners, and the status store behind
+    * `SparkContext.getRDDStorageInfo`, see a finished job only after it.
+    */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   /** A frame over the RDD of `checkpointed` (a local checkpoint) whose
     * `LogicalRDD` reports the RDD's measured block bytes as its size, or

@@ -10,10 +10,12 @@ import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
 import graft.operators.Bars
-import graft.streaming.{LocalCheckpointFileManager, StreamingBars, StreamingDedup}
+import graft.operators.Micro
+import graft.streaming.{LocalCheckpointFileManager, StreamingBars, StreamingCusum, StreamingDedup}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{DelegateToFileSystem, FileAlreadyExistsException, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -275,5 +277,57 @@ class StreamingRestartSpec extends AnyFunSuite {
     assert(emitted.length == emitted.distinct.length,
       s"keys emitted twice: ${emitted.diff(emitted.distinct)}")
     assert(emitted.toSet == files.flatten.map(_._2).toSet)
+  }
+
+  test("StreamingCusum restarted on its checkpoint with open state equals the batch events") {
+    import spark.implicits._
+    import StreamingCusum.{CusumState, Tick}
+    val root = Files.createTempDirectory("restart_cusum").toFile
+    val (in, out, ckpt) = (new File(root, "in"), new File(root, "out"), new File(root, "ckpt"))
+    val ticks = Micro.intTicks(spark, TestSpark.Sf).select("symbol", "ts", "event_id", "cents")
+      .as[Tick].collect().sortBy(t => (t.ts, t.event_id))
+    val files = ticks.grouped(ticks.length / 6 + 1).toSeq
+    val (k, h) = (3, 10000L)
+    // the stop point leaves per-symbol sums open: some symbol has moved
+    // since its last event without crossing the threshold
+    val open = files.take(k).flatten.foldLeft(Map.empty[String, CusumState]) { (m, t) =>
+      val st = m.getOrElse(t.symbol, CusumState(0L, hasPrev = false, 0L, 0L, 0L))
+      m.updated(t.symbol, StreamingCusum.step(st, t, h)._1)
+    }
+    assert(open.values.exists(st => st.n > 0 && (st.sp != 0L || st.sm != 0L)))
+
+    def feed(i: Int): Unit =
+      files(i).toSeq.toDF().coalesce(1).write.mode("append").parquet(in.getPath)
+
+    def start(): StreamingQuery =
+      StreamingCusum.track(spark.readStream.schema(Encoders.product[Tick].schema)
+          .option("maxFilesPerTrigger", "1").parquet(in.getPath).as[Tick], h)
+        .writeStream.format("parquet").outputMode("append")
+        .option("checkpointLocation", ckpt.getPath).start(out.getPath)
+
+    feed(0)
+    val q1 = start()
+    q1.processAllAvailable()
+    for (i <- 1 until k) {
+      feed(i)
+      q1.processAllAvailable()
+    }
+    q1.stop()
+    val q2 = start()
+    for (i <- k until files.length) {
+      feed(i)
+      q2.processAllAvailable()
+    }
+    val resumedAt = q2.recentProgress.map(_.batchId).min
+    q2.stop()
+    assert(resumedAt >= k, s"restart began at batch $resumedAt")
+
+    val cols = Seq("symbol", "ts", "event_id", "direction", "s_cents", "n_ticks").map(col)
+    val emitted = spark.read.parquet(out.getPath).select(cols: _*).collect().toSeq
+    val expected = Micro.cusumEvents(spark, TestSpark.Sf, h).select(cols: _*).collect().toSeq
+    val ids = emitted.map(_.getAs[Long]("event_id"))
+    assert(ids.length == ids.distinct.length, s"events emitted twice: ${ids.diff(ids.distinct)}")
+    assert(expected.nonEmpty)
+    assert(emitted.sortBy(_.toString) == expected.sortBy(_.toString))
   }
 }

@@ -74,4 +74,15 @@ class CleanerSpec extends AnyFunSuite {
     val added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     assert(added.isEmpty, s"fills left ${added.size} persistent RDD(s): $added")
   }
+
+  test("PortfolioOpt.covMatrix caches nothing of the frames it is given") {
+    val ticks = Tables.ticks(spark, TestSpark.Sf)
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    (1 to 3).foreach { batch =>
+      val bars = graft.operators.Bars.ohlcv(ticks, 3600).withColumn("close", col("close") + batch)
+      assert(graft.backtest.PortfolioOpt.covMatrix(bars).collect().nonEmpty)
+    }
+    val added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(added.isEmpty, s"covMatrix left ${added.size} persistent RDD(s): $added")
+  }
 }

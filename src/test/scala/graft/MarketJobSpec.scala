@@ -4,8 +4,6 @@ import graft.backtest.{Backtester, Metrics, Signals}
 import graft.etl.Cleaner
 import graft.sources.MarketJob
 import graft.tools.ExplainAudit
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -78,22 +76,14 @@ class MarketJobSpec extends AnyFunSuite {
   private val ColdSummaryJobs = 7
 
   test("cold summary runs a pinned number of Spark jobs as one memo-free plan") {
-    val sc = spark.sparkContext
     def coldJobs(): (Int, org.apache.spark.sql.DataFrame) = {
       cold()
-      ListenerBusAccess.drain(sc)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      }
-      sc.addSparkListener(l)
-      val df = try {
+      val (df, s) = obs.span("cold summary") {
         val df = MarketJob.summary(spark, d)
         df.collect()
-        ListenerBusAccess.drain(sc)
         df
-      } finally sc.removeSparkListener(l)
-      (jobs.get(), df)
+      }
+      (s.jobs, df)
     }
     val (n1, df) = coldJobs()
     val (n2, _) = coldJobs()

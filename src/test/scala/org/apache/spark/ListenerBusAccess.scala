@@ -2,14 +2,17 @@ package org.apache.spark
 
 import java.util.concurrent.CountDownLatch
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
+import scala.reflect.ClassTag
 
-/** Test access to the Spark internals job-count and size assertions
-  * need: listener events arrive asynchronously, so a test that counts
-  * jobs with a `SparkListener` waits for the bus to drain before reading.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerInterface}
+
+/** Test access to the listener bus: which listeners it holds, and a way
+  * to hold back the status store the way a busy bus does.
   */
 object ListenerBusAccess {
-  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+  /** The listeners of class `T` on `sc`'s bus, over all its queues. */
+  def listeners[T <: SparkListenerInterface: ClassTag](sc: SparkContext): Seq[T] =
+    sc.listenerBus.findListenersByClass[T]()
 
   /** Stalls the status queue, whose listener fills the status store
     * behind `SparkContext.getRDDStorageInfo`, at its first block update
