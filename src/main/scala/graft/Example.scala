@@ -30,7 +30,7 @@ object Example {
     println(s"  ${bars5m.count()} bars")
 
     println("[5/6] Mean-reversion strategy -> vectorized backtest...")
-    val bt = Backtester.run(Signals.meanReversion(bars1m))
+    val bt = Backtester.run(Signals.meanReversionPlain(bars1m))
     val trades = bt.filter(org.apache.spark.sql.functions.col("trade") =!= 0).count()
     println(s"  ${trades} position changes")
 

@@ -57,16 +57,7 @@ final case class GraftConfig(
   annLshCap: Long = 2000L,
   // --- portfolio optimization (PortfolioOpt.scala) ---
   /** Max symbols the weight-grid optimizer enumerates (driver-side grid). */
-  optMaxSymbols: Int = 64,
-  /** Smallest tick-scan size estimate (optimizer stats bytes — parquet
-    * file footprint) at which the day-chunked two-level scan forms run
-    * (q_asof_join union-fill, effective-spread quote basis). Below it
-    * the flat single-window forms run — bit-identical values, ~0.4-0.7 s
-    * less fixed stage cost; above it the chunked forms keep every
-    * symbol's stream off the single-task-sort cliff (sf10 rehearsal:
-    * ~23 s flat across core counts unchunked, 3.6-5.2 s chunked).
-    */
-  chunkedScanMinBytes: Long = 8L * 1024 * 1024
+  optMaxSymbols: Int = 64
 ) {
   /** Round-trip cost rate = commission + slippage (reference
     * backtesting.commission + backtesting.slippage).
@@ -141,7 +132,6 @@ object GraftConfig {
           c.copy(lshPairsPerDocPerBucket = v.toLong)
         case "ann.lsh_cap"                    => c.copy(annLshCap = v.toLong)
         case "portfolio.max_symbols"          => c.copy(optMaxSymbols = v.toInt)
-        case "scan.chunked_min_input_bytes"   => c.copy(chunkedScanMinBytes = v.toLong)
         case other => throw new IllegalArgumentException(
           s"unknown config key '$other' — known keys follow the reference's " +
             "settings.yaml section.key form (see GraftConfig.fromKeys)")

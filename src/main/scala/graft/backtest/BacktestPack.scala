@@ -102,12 +102,6 @@ object BacktestPack extends QueryPack {
     }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Oracle-pinned queries pin the PLAIN signal forms explicitly: the
-    // adaptive Signals.maCross/... route consults plan statistics, so a
-    // catalog ANALYZE could otherwise silently switch a verified query
-    // to the chunked form. (Since the r16 integer-cent decisions the two
-    // forms are equal by arithmetic — the pin now guards plan-shape
-    // stability, not values.)
     "q_signal_ma_cross" -> ((s, d) =>
       Signals.maCrossPlain(bars1m(s, d))
         .select(col("symbol"), col("bucket_ms"), col("close"),
@@ -407,7 +401,8 @@ object BacktestPack extends QueryPack {
         |         sum(floor(close * 100 + 0.5)) OVER (w ROWS BETWEEN 49 PRECEDING AND CURRENT ROW) AS slow_c""".stripMargin),
     // z-decision on integer-CENT sums via the division-free quadratic
     // dev²·19 > 80·(20·Σc² − (Σc)²), dev = 20c − Σc — exact in any
-    // association below 2^53, equal to Signals.mrSignal by arithmetic.
+    // association below 2^53, equal to Signals.meanReversionRule by
+    // arithmetic.
     "q_signal_mean_reversion" -> sigOracle(
       """CASE WHEN rn < 20 THEN 0
         |       WHEN floor(close * 100 + 0.5) * 20 - s1c < 0

@@ -54,9 +54,6 @@ object Backtester {
     * per session, every consumer reads the cache.
     */
   def maCrossCached(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    // plain form pinned: the oracled consumers' outputs must not depend
-    // on catalog-statistics state (the adaptive route can flip to the
-    // chunked prefix sums, which differ on exact comparison ties)
     graft.Memo.share("Backtester.maCross", s, d)(
       graft.Memo.pin(run(Signals.maCrossPlain(graft.operators.Bars.ohlcvCached(s, d, 60)))))
 

@@ -3,7 +3,7 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.Bridge
 
@@ -51,6 +51,16 @@ object obs {
   private def pct(ms: Seq[Long], q: Double): Long =
     if (ms.isEmpty) 0L else { val s = ms.sorted; s(math.min(s.size - 1, (q * s.size).toInt)) }
 
+  /** A stage's call site, unless that is the CompletableFuture frame an
+    * adaptive (AQE) stage is submitted from: such a stage is named by its
+    * RDDs' operator scopes, which tie it to plan nodes.
+    */
+  private def stageName(i: StageInfo): String = {
+    val site = i.name.linesIterator.nextOption().getOrElse("")
+    val scopes = if (site.contains("withThreadLocalCaptured")) Bridge.operatorScopes(i) else Nil
+    if (scopes.isEmpty) site else scopes.mkString(", ")
+  }
+
   private final class StageAcc {
     var name = ""
     var wallMs = 0L
@@ -84,7 +94,7 @@ object obs {
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
       val i = e.stageInfo
       stage(i.stageId).foreach { s =>
-        s.name = i.name.linesIterator.nextOption().getOrElse("")
+        s.name = stageName(i)
         s.wallMs = (for (c <- i.completionTime; t <- i.submissionTime) yield c - t).getOrElse(0L)
       }
     }

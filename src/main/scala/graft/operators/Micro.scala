@@ -39,25 +39,30 @@ object Micro {
   /** Day chunk for the two-level windows (ts is epoch-ns). */
   val ChunkNs = 86400000000000L
 
+  /** Smallest tick-scan size estimate (optimizer stats bytes — parquet
+    * file footprint) at which [[adaptiveChunkNs]] picks the chunked form.
+    */
+  val ChunkedScanMinBytes: Long = 8L * 1024 * 1024
+
   /** Scale-adaptive chunk span for the r17 day-chunked scans
     * (q_asof_join's union-fill, the effective-spread quote basis):
     * returns [[ChunkNs]] when the tick scan's optimizer size estimate
-    * crosses `scan.chunked_min_input_bytes`, else -1 (single-window
-    * form). Guide §2: partitioning must derive from input size, not a
+    * crosses [[ChunkedScanMinBytes]], else -1 (single-window form).
+    * Guide §2: partitioning must derive from input size, not a
     * constant tuned for local mode OR for the cluster — the chunked
     * form's carry/ghost stages cost a fixed ~0.4-0.7 s that buys
     * nothing at kB-MB feeds, and the single-window form serializes a
     * symbol's stream into one task at GB+ feeds (sf10 rehearsal: both
-    * queries ~23 s flat across core counts). Both forms are proven
-    * bit-identical (CoreSpec / MicroSpec form-equality properties), so
-    * the switch can never change values, only the plan shape. The
-    * estimate is driver-only plan statistics (parquet file footprint) —
+    * queries ~23 s flat across core counts unchunked, 3.6-5.2 s
+    * chunked). Both forms are proven bit-identical (CoreSpec / MicroSpec
+    * form-equality properties), so the switch can never change values,
+    * only the plan shape. The estimate is driver-only plan statistics —
     * no job runs, and the reader frame is session-memoized.
     */
   def adaptiveChunkNs(s: SparkSession, d: String): Long = {
     val bytes = graft.Tables.events(s, d).queryExecution
       .optimizedPlan.stats.sizeInBytes
-    if (bytes >= graft.GraftConfig.active.chunkedScanMinBytes) ChunkNs else -1L
+    if (bytes >= ChunkedScanMinBytes) ChunkNs else -1L
   }
 
   private val dec38 = DecimalType(38, 0)

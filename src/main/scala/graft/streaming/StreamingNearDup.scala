@@ -122,7 +122,8 @@ object StreamingNearDup {
   }
 
   /** Stateless per-row band keys: (input columns..., band, sig) — 8 rows
-    * per doc with >= 3 tokens (the exploded form the flag join uses).
+    * per doc with >= 3 tokens (the exploded form the ingest gate's
+    * band-hit join uses).
     */
   def bandKeys(docs: DataFrame): DataFrame =
     bandSigArray(docs, "__sigs")
@@ -176,18 +177,4 @@ object StreamingNearDup {
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark(Seq("doc_id", "match_doc"))
   }
-
-  /** The pre-r14 explode-everything form: every doc's 8 band rows go
-    * through the identity join. Keep ONLY for feeds where most docs are
-    * expected to hit (e.g. replaying a known-duplicated backlog), where
-    * the probe prefilter saves nothing; on organic feeds (hits rare) the
-    * probe-shaped [[flagged]] is ~13x faster (streambench_r13_10x).
-    */
-  def flaggedEager(docs: DataFrame, index: DataFrame, watermark: String): DataFrame =
-    bandKeys(docs)
-      .join(index, Seq("band", "sig")) // stream-static inner join
-      .filter(col("doc_id") =!= col("match_doc"))
-      .select(col("ts"), col("doc_id"), col("match_doc"))
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(Seq("doc_id", "match_doc"))
 }

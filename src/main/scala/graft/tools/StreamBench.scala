@@ -148,8 +148,7 @@ object StreamBench {
     // (novel — the probe prefilter passes them without ever touching the
     // identity join). Replaying the corpus verbatim (the pre-r14 feed)
     // made every doc a 100% self-hit, which measures the degenerate
-    // all-dup backlog (flaggedEager's case), not the live-gate posture
-    // this lane exists for.
+    // all-dup backlog, not the live-gate posture this lane exists for.
     val docsDf = Tables.documents(spark, sfDir)
     val index = graft.streaming.StreamingNearDup.corpusIndex(docsDf).cache()
     index.count()

@@ -2,6 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.{SparkContext, SparkEnv}
 import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.StageInfo
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
@@ -14,7 +15,8 @@ import org.apache.spark.storage.RDDBlockId
   * supported escape hatch for libraries that define native Catalyst
   * expressions against the classic SQL API (Spark 4 wraps Columns around
   * ColumnNodes, not Expressions) — into `Dataset.ofRows`, the block
-  * manager's record of a checkpoint's blocks, and the listener bus.
+  * manager's record of a checkpoint's blocks, the listener bus, and the
+  * `private[spark]` operator scopes of a stage's RDDs.
   */
 object Bridge {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
@@ -25,6 +27,12 @@ object Bridge {
     * `SparkContext.getRDDStorageInfo`, see a finished job only after it.
     */
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** The plan operators that built a stage's RDDs (`Exchange`,
+    * `WholeStageCodegen (2)`, ...), latest RDD first, each named once.
+    */
+  def operatorScopes(stage: StageInfo): Seq[String] =
+    stage.rddInfos.sortBy(-_.id).flatMap(_.scope.map(_.name)).distinct
 
   /** A frame over the RDD of `checkpointed` (a local checkpoint) whose
     * `LogicalRDD` reports the RDD's measured block bytes as its size, or

@@ -46,14 +46,14 @@ class BacktestSpec extends AnyFunSuite {
 
   test("signals warmup: no signal before lookback completes") {
     val bars = graft.operators.Bars.ohlcv(Tables.ticks(spark, TestSpark.Sf), 3600)
-    val sig = Signals.maCross(bars, fast = 3, slow = 5)
+    val sig = Signals.maCrossPlain(bars, fast = 3, slow = 5)
     val early = sig.filter(col("rn") < 5).filter(col("signal") =!= 0).count()
     assert(early == 0)
   }
 
   test("metrics aggregate produces one row per symbol with sane bounds") {
     val bars = graft.operators.Bars.ohlcv(Tables.ticks(spark, TestSpark.Sf), 60)
-    val m = Metrics.compute(Backtester.run(Signals.maCross(bars))).collect()
+    val m = Metrics.compute(Backtester.run(Signals.maCrossPlain(bars))).collect()
     assert(m.length == 5)
     m.foreach { r =>
       val mdd = r.getAs[Double]("max_drawdown")

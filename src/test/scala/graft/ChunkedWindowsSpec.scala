@@ -28,20 +28,14 @@ class ChunkedWindowsSpec extends AnyFunSuite {
     assert(sigKey(Signals.momentumChunked(bars)) == sigKey(Signals.momentumPlain(bars)))
   }
 
-  test("adaptive default routes by per-symbol depth and keeps identical signals") {
-    // no hint + no plan stats → flat form (unknown depth must not pay
-    // the chunked constants); deep hint → chunked form
-    assert(!Signals.useChunked(bars))
-    assert(Signals.useChunked(bars, Some(Signals.ChunkSwitchRows)))
-    assert(!Signals.useChunked(bars, Some(Signals.ChunkSwitchRows - 1)))
-    // routed output is the same signal set on BOTH sides of the switch
-    assert(sigKey(Signals.maCross(bars)) == sigKey(Signals.maCrossPlain(bars)))
-    assert(sigKey(Signals.maCross(bars, rowsPerSymbolHint = Some(Long.MaxValue))) ==
-      sigKey(Signals.maCrossPlain(bars)))
-    assert(sigKey(Signals.meanReversion(bars, rowsPerSymbolHint = Some(Long.MaxValue))) ==
-      sigKey(Signals.meanReversionPlain(bars)))
-    assert(sigKey(Signals.momentum(bars, rowsPerSymbolHint = Some(Long.MaxValue))) ==
-      sigKey(Signals.momentumPlain(bars)))
+  test("the fused three-signal frame equals the single signal forms row-for-row") {
+    val fused = Signals.allThreePlain(bars)
+    for ((c, single) <- Seq("s_ma" -> Signals.maCrossPlain(bars),
+        "s_mr" -> Signals.meanReversionPlain(bars), "s_mo" -> Signals.momentumPlain(bars))) {
+      val part = sigKey(fused.withColumnRenamed(c, "signal"))
+      assert(part.exists(_._4 != 0), s"$c never fires")
+      assert(part == sigKey(single), c)
+    }
   }
 
   test("no row-scale window partitions by symbol alone") {

@@ -23,6 +23,10 @@ class ObsSpec extends AnyFunSuite {
     assert(s.shuffleWriteBytes > 0 && s.shuffleReadBytes > 0)
     // under AQE: the map stage's job, then the result job over the read
     assert(s.jobs == 2, s"groupBy span ran ${s.jobs} jobs")
+    // AQE stage call sites are a CompletableFuture frame; the name comes
+    // from the stage's operator scopes instead
+    val names = s.stages.map(_.name)
+    assert(names.forall(n => n.nonEmpty && !n.contains("withThreadLocalCaptured")), names)
   }
 
   test("consecutive spans attribute disjointly; jobs outside any span go to none") {

@@ -42,7 +42,7 @@ class StopLossSpec extends AnyFunSuite {
 
   test("signal exit and end-of-data exits are labeled; invariants hold on real data") {
     val trades = StopLoss.run(
-      graft.backtest.Signals.maCross(
+      graft.backtest.Signals.maCrossPlain(
         graft.operators.Bars.ohlcv(Tables.ticks(spark, TestSpark.Sf), 60))).collect()
     assert(trades.nonEmpty)
     trades.foreach { t =>

@@ -353,28 +353,22 @@ class StreamingNearDupSpec extends AnyFunSuite {
       (101L, "en", "one two three four five six"))
       .toDF("doc_id", "lang", "text")
     val index = StreamingNearDup.corpusIndex(corpus)
-    // both forms — the probe-shaped default and the explode-eager
-    // variant — must satisfy the identical contract on the same feed
-    for ((form, qn) <- Seq(
-        (StreamingNearDup.flagged _, "sneardup"),
-        (StreamingNearDup.flaggedEager _, "sneardup_eager"))) {
-      val input = MemoryStream[(Timestamp, Long, String)]
-      val docs = input.toDF().toDF("ts", "doc_id", "text")
-      val q = form(docs, index, "10 minutes")
-        .writeStream.format("memory").queryName(qn).outputMode("append").start()
-      input.addData(
-        (new Timestamp(1000L), 1L, "alpha beta gamma delta eps zeta"), // copy of 100
-        (new Timestamp(2000L), 2L, "purple monkey dishwasher quantum flux pancake"),
-        (new Timestamp(2500L), 3L, "hi")) // < 3 tokens: no signature, no crash
-      q.processAllAvailable()
-      // the same pair re-arriving in a later micro-batch stays flagged ONCE
-      input.addData((new Timestamp(3000L), 1L, "alpha beta gamma delta eps zeta"))
-      q.processAllAvailable()
-      q.stop()
-      val rows = spark.table(qn).collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("match_doc")))
-      assert(rows.toSeq === Seq((1L, 100L)), s"form=$qn")
-    }
+    val input = MemoryStream[(Timestamp, Long, String)]
+    val docs = input.toDF().toDF("ts", "doc_id", "text")
+    val q = StreamingNearDup.flagged(docs, index, "10 minutes")
+      .writeStream.format("memory").queryName("sneardup").outputMode("append").start()
+    input.addData(
+      (new Timestamp(1000L), 1L, "alpha beta gamma delta eps zeta"), // copy of 100
+      (new Timestamp(2000L), 2L, "purple monkey dishwasher quantum flux pancake"),
+      (new Timestamp(2500L), 3L, "hi")) // < 3 tokens: no signature, no crash
+    q.processAllAvailable()
+    // the same pair re-arriving in a later micro-batch stays flagged ONCE
+    input.addData((new Timestamp(3000L), 1L, "alpha beta gamma delta eps zeta"))
+    q.processAllAvailable()
+    q.stop()
+    val rows = spark.table("sneardup").collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("match_doc")))
+    assert(rows.toSeq === Seq((1L, 100L)))
   }
 
   test("streaming dollar bars equal the batch bars (minus open bars) across batch splits") {
